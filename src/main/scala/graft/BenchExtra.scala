@@ -1,5 +1,7 @@
 package graft
 
+import scala.util.control.NonFatal
+
 import org.apache.spark.sql.SparkSession
 
 /** Optimization-round measurement harness (guide §1.4): per-query
@@ -13,7 +15,10 @@ import org.apache.spark.sql.SparkSession
   * Each query is materialized through the noop sink (computes every
   * column of every row — count() would let the optimizer prune), run
   * `passes` times (default 3) after one untimed warm pass; min and all
-  * samples are printed (host noise only ever slows a pass).
+  * samples are printed (host noise only ever slows a pass). A query that
+  * throws prints `[bx] <name> FAILED: <msg>` instead; fatal errors abort.
+  * This is the one dev timing main: pair it with Verify's
+  * SPARK_GRAFT_VERIFY_ONLY subset loop for correctness.
   */
 object BenchExtra {
   private def scratchBase: String =
@@ -54,33 +59,34 @@ object BenchExtra {
     // warm codegen/IO like Bench does
     try qmap("q01_agg_pricing")(spark, sfDir).write.format("noop")
       .mode("overwrite").save()
-    catch { case _: Throwable => () }
+    catch { case NonFatal(e) => System.err.println(s"[bx] warm-up FAILED: ${e.getMessage}") }
 
     names.foreach { name =>
       val fn = qmap.getOrElse(name, sys.error(s"unknown query $name"))
-      explainDir.foreach { d =>
-        java.nio.file.Files.createDirectories(java.nio.file.Paths.get(d))
-        val plan = fn(spark, sfDir).queryExecution.explainString(
-          org.apache.spark.sql.execution.FormattedMode)
-        java.nio.file.Files.write(
-          java.nio.file.Paths.get(d, s"$name.txt"),
-          plan.getBytes("UTF-8"))
-      }
       spark.sparkContext.setJobDescription(s"bx:$name")
       def once: Double = {
         val t0 = System.nanoTime()
         fn(spark, sfDir).write.format("noop").mode("overwrite").save()
         (System.nanoTime() - t0) / 1e9
       }
-      val secs = try {
+      // a failed query prints FAILED and no min= field: never a sentinel
+      // value a parser could read as a timing
+      try {
+        explainDir.foreach { d =>
+          java.nio.file.Files.createDirectories(java.nio.file.Paths.get(d))
+          val plan = fn(spark, sfDir).queryExecution.explainString(
+            org.apache.spark.sql.execution.FormattedMode)
+          java.nio.file.Files.write(
+            java.nio.file.Paths.get(d, s"$name.txt"),
+            plan.getBytes("UTF-8"))
+        }
         once // untimed warm pass (codegen/JIT)
-        (1 to passes).map(_ => once)
-      } catch { case e: Throwable =>
-        System.err.println(s"[bx] $name FAILED: ${e.getMessage}")
-        Seq(-1.0)
+        val secs = (1 to passes).map(_ => once)
+        println(f"[bx] $name%-28s min=${secs.min}%7.3f  samples=" +
+          secs.map(s => f"$s%.3f").mkString(","))
+      } catch { case NonFatal(e) =>
+        println(s"[bx] $name FAILED: ${e.getMessage}")
       }
-      println(f"[bx] $name%-28s min=${secs.min}%7.3f  samples=" +
-        secs.map(s => f"$s%.3f").mkString(","))
     }
     spark.stop()
     def rmTree(p: java.nio.file.Path): Unit = {

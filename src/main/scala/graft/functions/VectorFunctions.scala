@@ -35,39 +35,41 @@ object VectorFunctions {
     * rational, bit-identical in any IEEE-double engine. */
   def planeWeight(bit: Int, d: Int): Double = planeH16(bit, d) / 32768.0 - 1.0
 
-  /** Random-hyperplane LSH bucket: sign bits of `nBits` deterministic
-    * projections. Two vectors share a bucket with probability rising in
-    * their cosine — the scale path for ANN: group by bucket, then
-    * brute-force only within buckets (candidate set shrinks ~2^nBits-fold).
-    * The projection matrix is md5-derived plan literals (nBits x dim
-    * doubles — bytes, not a broadcast), so any cluster size computes
-    * identical buckets AND an ANSI-SQL oracle can replay the assignment
-    * bit-exactly: the projection is a strict left-fold in dimension order,
-    * matching DuckDB's list_dot_product accumulation.
+  /** The random-hyperplane projections of `v` onto planes [0, n), as one
+    * array — the ONLY place LSH projections are built. The plane matrix
+    * is md5-derived plan literals (n x dim doubles — bytes, not a
+    * broadcast), so any cluster size computes identical projections AND
+    * an ANSI-SQL oracle replays them bit-exactly.
     *
-    * `firstBit` selects the hyperplane range [firstBit, firstBit+nBits) —
-    * banded multi-table LSH uses one disjoint range per band so band
-    * buckets are independent.
-    *
-    * Each projection is `aggregate(zip_with(v, <array literal>))` — a
-    * strict left fold in dimension order (bit-identical to DuckDB's
+    * Each element is `aggregate(zip_with(v, <array literal>))` — a strict
+    * left fold in dimension order (bit-identical to DuckDB's
     * list_dot_product; the leading 0.0 + x is an IEEE identity) — NOT an
-    * unrolled element_at sum: unrolling dim x nBits terms made the
-    * generated code so large that janino compilation took ~10s PER STAGE
-    * (measured at dim=64, 32 planes), recompiled for every plan that
-    * embeds the expression. A compact HOF over one literal per plane
-    * keeps the tree small; the fold itself is O(dim) per plane per row. */
-  def lshBucket(v: Column, dim: Int, nBits: Int = 8, firstBit: Int = 0): Column = {
-    (0 until nBits).map(j =>
-      when(proj(v, dim, firstBit + j) >= 0, 1L << j).otherwise(0L))
-      .reduce(_ + _)
-  }
+    * unrolled element_at sum: unrolling dim x n terms made the generated
+    * code so large that janino compilation took ~10s PER STAGE (measured
+    * at dim=64, 32 planes), recompiled for every plan that embeds it.
+    *
+    * Bucket and mask below READ this array: materialize it once per row
+    * (its own projection column, or `TextFunctions.bound`) so each plane
+    * folds once, however many bands, buckets and masks read it — Catalyst
+    * does no common-subexpression elimination across references. */
+  def projections(v: Column, dim: Int, n: Int): Column =
+    array((0 until n).map { bit =>
+      val w = lit((0 until dim).map(d => planeWeight(bit, d)).toArray)
+      aggregate(zip_with(v, w, (x, y) => x.cast("double") * y),
+        lit(0.0), (acc, t) => acc + t)
+    }: _*)
 
-  private def proj(v: Column, dim: Int, bit: Int): Column = {
-    val w = lit((0 until dim).map(d => planeWeight(bit, d)).toArray)
-    aggregate(zip_with(v, w, (x, y) => x.cast("double") * y),
-      lit(0.0), (acc, t) => acc + t)
-  }
+  /** Random-hyperplane LSH bucket: the sign bits of the `nBits`
+    * projections `p[from + 1 .. from + nBits]` (`p` from `projections`, a
+    * cheap reference). Two vectors share a bucket with probability rising
+    * in their cosine — the scale path for ANN: join on bucket, then rank
+    * only within buckets (candidate set shrinks ~2^nBits-fold). Banded
+    * multi-table LSH reads one disjoint `from` range per band, so band
+    * buckets are independent. */
+  def lshBucket(p: Column, nBits: Int, from: Int): Column =
+    (0 until nBits).map(j =>
+      when(element_at(p, from + j + 1) >= 0, 1L << j).otherwise(0L))
+      .reduce(_ + _)
 
   /** Multi-probe helper: the single-bit mask (1L << j) of the bucket's
     * LEAST-CONFIDENT bit — the hyperplane whose projection magnitude is
@@ -75,11 +77,11 @@ object VectorFunctions {
     * neighbor. Query-time multi-probe ANN probes `bucket` and
     * `bucket ^ mask` per band: ≤2× the candidate volume for most of the
     * recall a full Hamming-1 expansion (nBits+1 probes) would buy.
-    * Ties break to the LOWEST bit index via a `<=` chain; projections are
-    * the same dyadic-rational left folds as `lshBucket`, so an ANSI-SQL
-    * oracle replays the argmin decision bit-exactly. */
-  def lshWeakBitMask(v: Column, dim: Int, nBits: Int, firstBit: Int = 0): Column = {
-    val abses = (0 until nBits).map(j => abs(proj(v, dim, firstBit + j)))
+    * Ties break to the LOWEST bit index via a `<=` chain over the same
+    * projections `lshBucket` reads, so an ANSI-SQL oracle replays the
+    * argmin decision bit-exactly. */
+  def lshWeakBitMask(p: Column, nBits: Int, from: Int): Column = {
+    val abses = (0 until nBits).map(j => abs(element_at(p, from + j + 1)))
     (0 until nBits - 1).foldRight(lit(1L << (nBits - 1))) { (j, rest) =>
       when((j + 1 until nBits).map(k => abses(j) <= abses(k)).reduce(_ && _),
         lit(1L << j)).otherwise(rest)

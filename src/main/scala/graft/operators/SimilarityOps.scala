@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{Column, DataFrame, Observation}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -13,48 +13,32 @@ import graft.functions.VectorFunctions._
   *    The query side is broadcast (it is small by construction); the corpus
   *    side streams through codegen'd cosine — no shuffle of the corpus at
   *    all, so it scales linearly with corpus size.
-  *  - lshTopK: the scale path — random-hyperplane LSH buckets both sides,
-  *    joins on bucket, and ranks within candidates only. Recall < 1 by
-  *    design; the bench reports both so the tradeoff is measurable.
+  *  - lshTopK / lshTopKBanded: the scale path — random-hyperplane LSH
+  *    buckets both sides, joins on bucket, and ranks within candidates
+  *    only. Recall < 1 by design; the bench reports both so the tradeoff is
+  *    measurable.
+  *
+  * Every path is built from four private parts: `side` (the per-vector
+  * projection: id, embedding, norm, band buckets), `bandJoin` (the
+  * (band, bucket) candidate join with the first-matching-band rule),
+  * `rcos` (the rounded cosine) and `topK` (the per-query ranker).
   */
 object SimilarityOps {
 
-  def bruteForceTopK(corpus: DataFrame, queries: DataFrame, k: Int = 5): DataFrame = {
-    // norms are per-VECTOR values: computing them in the side projections
-    // (identical sqrt-of-dot fold — bit-identical results) leaves one dot
-    // fold per scored pair instead of three
-    val q = queries.select(col("vec_id").as("query_id"), col("embedding").as("q_emb"),
-      norm2(col("embedding")).as("q_nrm"))
-    val c = Spread(corpus).select(col("vec_id").as("cand_id"), col("embedding").as("c_emb"),
-      norm2(col("embedding")).as("c_nrm"))
-    val scored = c.crossJoin(broadcast(q))
-      .filter(col("query_id") =!= col("cand_id"))
-      .select(col("query_id"), col("cand_id"),
-        round(dot(col("q_emb"), col("c_emb")) /
-          (col("q_nrm") * col("c_nrm")), 6).as("cos"))
-    val w = Window.partitionBy("query_id").orderBy(col("cos").desc, col("cand_id"))
-    scored.withColumn("rk", row_number().over(w)).filter(col("rk") <= k)
-      .select("query_id", "cand_id", "cos", "rk")
-  }
+  private case class Lsh(dim: Int, bands: Int, bits: Int, multiProbe: Boolean = false)
 
-  /** LSH-bucketed ANN: candidates share a hyperplane-sign bucket. */
+  def bruteForceTopK(corpus: DataFrame, queries: DataFrame, k: Int = 5): DataFrame =
+    topK(side(Spread(corpus), "cand_id", "c")
+      .crossJoin(broadcast(side(queries, "query_id", "q")))
+      .filter(col("query_id") =!= col("cand_id"))
+      .select(col("query_id"), col("cand_id"), rcos("q", "c").as("cos")), k)
+
+  /** LSH-bucketed ANN, single table: candidates share one `nBits`-bit
+    * hyperplane-sign bucket — `lshTopKBanded` with one band (band 0 starts
+    * at plane 0, so the candidate set is the same). */
   def lshTopK(corpus: DataFrame, queries: DataFrame, dim: Int, k: Int = 5,
-              nBits: Int = 8): DataFrame = {
-    val q = queries.select(col("vec_id").as("query_id"), col("embedding").as("q_emb"),
-      norm2(col("embedding")).as("q_nrm"),
-      lshBucket(col("embedding"), dim, nBits).as("bucket"))
-    val c = Spread(corpus).select(col("vec_id").as("cand_id"), col("embedding").as("c_emb"),
-      norm2(col("embedding")).as("c_nrm"),
-      lshBucket(col("embedding"), dim, nBits).as("c_bucket"))
-    val scored = c.join(broadcast(q), col("bucket") === col("c_bucket") &&
-        col("query_id") =!= col("cand_id"))
-      .select(col("query_id"), col("cand_id"),
-        round(dot(col("q_emb"), col("c_emb")) /
-          (col("q_nrm") * col("c_nrm")), 6).as("cos"))
-    val w = Window.partitionBy("query_id").orderBy(col("cos").desc, col("cand_id"))
-    scored.withColumn("rk", row_number().over(w)).filter(col("rk") <= k)
-      .select("query_id", "cand_id", "cos", "rk")
-  }
+              nBits: Int = 8): DataFrame =
+    lshTopKBanded(corpus, queries, dim, k, bands = 1, bitsPerBand = nBits)
 
   /** Banded (multi-table) LSH ANN — the production similarity-SEARCH path.
     *
@@ -72,20 +56,13 @@ object SimilarityOps {
     * posexplode their band buckets and meet in a broadcast HASH join on
     * (band, bucket) — the corpus is never shuffled and is scanned once.
     * Cross-band duplicates are dropped STATELESSLY by the first-matching-
-    * band rule (same trick as nearDupAgainstCorpus — no DISTINCT shuffle),
-    * then exact cosine ranks within each query's candidate union. */
+    * band rule (`bandJoin` — no DISTINCT shuffle), then exact cosine ranks
+    * within each query's candidate union. */
   def lshTopKBanded(corpus: DataFrame, queries: DataFrame, dim: Int,
                     k: Int = 5, bands: Int = 4, bitsPerBand: Int = 4,
-                    multiProbe: Boolean = false): DataFrame = {
-    val scored = lshBandedCandidates(corpus, queries, dim, bands, bitsPerBand,
-        multiProbe)
-      .select(col("query_id"), col("cand_id"),
-        round(dot(col("q_emb"), col("c_emb")) /
-          (col("q_nrm") * col("c_nrm")), 6).as("cos"))
-    val w = Window.partitionBy("query_id").orderBy(col("cos").desc, col("cand_id"))
-    scored.withColumn("rk", row_number().over(w)).filter(col("rk") <= k)
-      .select("query_id", "cand_id", "cos", "rk")
-  }
+                    multiProbe: Boolean = false): DataFrame =
+    topK(lshBandedCandidates(corpus, queries, dim, bands, bitsPerBand, multiProbe)
+      .select(col("query_id"), col("cand_id"), rcos("q", "c").as("cos")), k)
 
   /** The candidate stage of the banded ANN, shared by `lshTopKBanded`'s
     * plain and MULTI-PROBE forms and exposed so the bench can record the
@@ -105,54 +82,10 @@ object SimilarityOps {
     * xor is 0 (exact) or equals that band's probe mask (flip probe). */
   def lshBandedCandidates(corpus: DataFrame, queries: DataFrame, dim: Int,
                           bands: Int = 4, bitsPerBand: Int = 4,
-                          multiProbe: Boolean = false): DataFrame = {
-    def bucketArr = array((0 until bands).map(bd =>
-      lshBucket(col("embedding"), dim, bitsPerBand, firstBit = bd * bitsPerBand)): _*)
-    def maskArr = array((0 until bands).map(bd =>
-      lshWeakBitMask(col("embedding"), dim, bitsPerBand, firstBit = bd * bitsPerBand)): _*)
-    val qCols = Seq(col("query_id"), col("q_emb"), col("q_nrm"), col("bks_q")) ++
-      (if (multiProbe) Seq(col("mks_q")) else Nil)
-    val q0 = queries
-      .select(Seq(col("vec_id").as("query_id"), col("embedding").as("q_emb"),
-        norm2(col("embedding")).as("q_nrm"),
-        bucketArr.as("bks_q")) ++
-        (if (multiProbe) Seq(maskArr.as("mks_q")) else Nil): _*)
-    // probe rows: the exact bucket per band, plus (multi-probe) the
-    // weak-bit flip per band — explicit structs, not posexplode, so the
-    // probe list stays a query-side constant shape
-    val probes = (0 until bands).flatMap { bd =>
-      val b = element_at(col("bks_q"), bd + 1)
-      Seq(struct(lit(bd).as("band"), b.as("bucket"))) ++
-        (if (multiProbe)
-          Seq(struct(lit(bd).as("band"),
-            b.bitwiseXOR(element_at(col("mks_q"), bd + 1)).as("bucket")))
-        else Nil)
-    }
-    val q = q0.select(qCols :+ explode(array(probes: _*)).as("pr"): _*)
-      .select(qCols :+ col("pr")("band").as("band") :+
-        col("pr")("bucket").as("bucket"): _*)
-    val c = Spread(corpus)
-      .select(col("vec_id").as("cand_id"), col("embedding").as("c_emb"),
-        norm2(col("embedding")).as("c_nrm"), bucketArr.as("bks_c"))
-      .select(col("cand_id"), col("c_emb"), col("c_nrm"), col("bks_c"),
-        posexplode(col("bks_c")).as(Seq("band_c", "bucket_c")))
-    // keep a colliding pair only at its FIRST matching band (see
-    // nearDupAgainstCorpus for the greatest(band,1) eager-safety note)
-    val earlierBandMatched = exists(
-      sequence(lit(1), greatest(col("band"), lit(1))),
-      j => {
-        val x = element_at(col("bks_q"), j)
-          .bitwiseXOR(element_at(col("bks_c"), j))
-        if (multiProbe) x === 0L || x === element_at(col("mks_q"), j)
-        else x === 0L
-      })
-    c.join(broadcast(q),
-        col("band") === col("band_c") && col("bucket") === col("bucket_c") &&
-        col("query_id") =!= col("cand_id"))
-      .filter(when(col("band") === 0, lit(true)).otherwise(!earlierBandMatched))
-      .select(col("query_id"), col("cand_id"), col("q_emb"), col("c_emb"),
-        col("q_nrm"), col("c_nrm"))
-  }
+                          multiProbe: Boolean = false): DataFrame =
+    bandJoin(queries, corpus, "query_id", "cand_id",
+        Lsh(dim, bands, bitsPerBand, multiProbe))
+      .select("query_id", "cand_id", "q_emb", "c_emb", "q_nrm", "c_nrm")
 
   /** IVF (inverted-file) ANN — CENTROID-pruned search, the clustered
     * alternative to `lshTopKBanded`'s hash pruning.
@@ -183,134 +116,63 @@ object SimilarityOps {
     * structurally impossible — no dedup stage on either side. */
   def ivfTopK(corpus: DataFrame, queries: DataFrame, k: Int = 5,
               nCentroids: Int = 16, nProbe: Int = 4): DataFrame = {
-    val centCols = corpus.filter(col("vec_id") < nCentroids)
-      .select(col("vec_id").as("cent_id"), col("embedding").as("cent_emb"),
-        norm2(col("embedding")).as("cent_norm"))
-    val codebook = centCols
-      .agg(sort_array(collect_list(struct(col("cent_id"), col("cent_emb"),
-        col("cent_norm")))).as("cents"))
+    val cents = side(corpus.filter(col("vec_id") < nCentroids), "cent_id", "cent")
+    val codebook = cents.agg(sort_array(collect_list(
+      struct(col("cent_id"), col("cent_emb"), col("cent_nrm")))).as("cents"))
     // rounded cosine per centroid, computed ONCE per element: norms are
-    // precomputed on both sides, so the lambda's only fold is the dot —
-    // dot/(normA*normB) is the identical expression tree `cosine` builds,
-    // hence bit-identical to the oracle's list_cosine_similarity
+    // precomputed on both sides, so the lambda's only fold is the dot
     val scoredCents = transform(col("cents"), c =>
-      struct(round(dot(col("c_emb"), c("cent_emb")) /
-          (col("c_norm") * c("cent_norm")), 6).as("acos"),
+      struct(rcos(col("c_emb"), c("cent_emb"), col("c_nrm"), c("cent_nrm")).as("acos"),
         c("cent_id").as("cent_id")))
     val assignment = aggregate(scoredCents,
       struct(lit(-2.0).as("acos"), lit(-1L).as("cent_id")),
       (acc, s) => when(s("acos") > acc("acos"), s).otherwise(acc))
-    val assigned = Spread(corpus)
-      .select(col("vec_id").as("cand_id"), col("embedding").as("c_emb"),
-        norm2(col("embedding")).as("c_norm"))
+    val assigned = side(Spread(corpus), "cand_id", "c")
       .crossJoin(broadcast(codebook))
-      .select(col("cand_id"), col("c_emb"), col("c_norm"),
+      .select(col("cand_id"), col("c_emb"), col("c_nrm"),
         assignment.getField("cent_id").as("cent_id"))
-    // query probe lists: queries are small by construction, so a window
-    // over queries x codebook is tiny; the same rounded-cosine + cent_id
+    // query probe lists: queries are small by construction, so ranking
+    // queries x codebook is tiny; the same rounded-cosine + cent_id
     // tie-break keeps the probe choice engine-replayable
-    val wP = Window.partitionBy("query_id").orderBy(col("pcos").desc, col("cent_id"))
-    val probes = queries
-      .select(col("vec_id").as("query_id"), col("embedding").as("q_emb"),
-        norm2(col("embedding")).as("q_nrm"))
-      .crossJoin(broadcast(centCols.select(col("cent_id"), col("cent_emb"))))
-      .select(col("query_id"), col("q_emb"), col("q_nrm"), col("cent_id"),
-        round(cosine(col("q_emb"), col("cent_emb")), 6).as("pcos"))
-      .withColumn("prk", row_number().over(wP)).filter(col("prk") <= nProbe)
-      .select(col("query_id"), col("q_emb"), col("q_nrm"), col("cent_id"))
-    val scored = assigned.join(broadcast(probes), Seq("cent_id"))
+    val probes = topK(side(queries, "query_id", "q").crossJoin(broadcast(cents))
+        .select(col("query_id"), col("q_emb"), col("q_nrm"), col("cent_id"),
+          rcos("q", "cent").as("pcos")), nProbe, cand = "cent_id", score = "pcos")
+      .select("query_id", "q_emb", "q_nrm", "cent_id")
+    topK(assigned.join(broadcast(probes), Seq("cent_id"))
       .filter(col("query_id") =!= col("cand_id"))
-      .select(col("query_id"), col("cand_id"),
-        round(dot(col("q_emb"), col("c_emb")) /
-          (col("q_nrm") * col("c_norm")), 6).as("cos"))
-    val w = Window.partitionBy("query_id").orderBy(col("cos").desc, col("cand_id"))
-    scored.withColumn("rk", row_number().over(w)).filter(col("rk") <= k)
-      .select("query_id", "cand_id", "cos", "rk")
+      .select(col("query_id"), col("cand_id"), rcos("q", "c").as("cos")), k)
   }
 
   /** Embedding-cosine near-duplicate pairs, EXACT all-pairs form
     * (vec_a < vec_b, cos >= tau). O(n^2) — this is the verify-scale oracle
     * twin and recall reference; the production path at corpus scale is
     * `cosineNearDupPairsBucketed` below. */
-  def cosineNearDupPairs(emb: DataFrame, tau: Double = 0.95): DataFrame = {
-    val a = Spread(emb).select(col("vec_id").as("vec_a"), col("embedding").as("e_a"),
-      norm2(col("embedding")).as("n_a"))
-    val b = emb.select(col("vec_id").as("vec_b"), col("embedding").as("e_b"),
-      norm2(col("embedding")).as("n_b"))
-    a.join(b, col("vec_a") < col("vec_b"))
-      .select(col("vec_a"), col("vec_b"),
-        round(dot(col("e_a"), col("e_b")) / (col("n_a") * col("n_b")), 6)
-          .as("cos"))
+  def cosineNearDupPairs(emb: DataFrame, tau: Double = 0.95): DataFrame =
+    side(Spread(emb), "vec_a", "a").join(side(emb, "vec_b", "b"),
+        col("vec_a") < col("vec_b"))
+      .select(col("vec_a"), col("vec_b"), rcos("a", "b").as("cos"))
       .filter(col("cos") >= tau)
-  }
 
   /** Near-dup gate against a STATIC corpus — "is this incoming document a
     * duplicate of anything already in the training set?", the ingest-time
     * twin of cosineNearDupPairsBucketed. Works on a STREAMING `incoming`
     * unchanged: the corpus bucket table is broadcast, each micro-batch
     * joins executor-locally — stateless enrichment-shaped matching, no
-    * streaming state at all.
+    * streaming state at all. Multi-band dedup is stateless too (the
+    * first-matching-band rule of `bandJoin` — no DISTINCT, which would be
+    * stateful on a stream).
     *
-    * Multi-band dedup is stateless too: a pair colliding in several bands
-    * is kept only at its FIRST matching band (both sides carry their full
-    * band-bucket arrays; a codegen-friendly exists() checks no earlier
-    * band also collided) — no DISTINCT, which would be stateful on a
-    * stream. On a BATCH incoming side the probe set itself is broadcast
-    * and the corpus only streamed (see the join-direction note below);
-    * on a streaming input with a corpus too large to broadcast, flip
-    * `broadcastCorpus` and the same plan becomes a hash shuffle on
-    * (band, bucket). */
+    * The join direction follows `incoming.isStreaming` (`bandJoin`): a
+    * STREAMING input probes a broadcast of the raw corpus; a BATCH
+    * `incoming` is the probe set, so IT is broadcast — with no size bound
+    * — and the corpus only streamed. The size-gated shuffle fallback for a
+    * large batch `incoming` is ROADMAP item 5. */
   def nearDupAgainstCorpus(incoming: DataFrame, corpus: DataFrame,
                            tau: Double = 0.95, dim: Int = 64, bands: Int = 4,
-                           bitsPerBand: Int = 8,
-                           broadcastCorpus: Boolean = true): DataFrame = {
-    def bucketArr = array((0 until bands).map(bd =>
-      lshBucket(col("embedding"), dim, bitsPerBand, firstBit = bd * bitsPerBand)): _*)
-    // Spread only when the incoming side is the join's PROBE side (see
-    // join-direction note below); as a broadcast build the repartition
-    // would just add an exchange inside the broadcast job
-    val inProbe = incoming.isStreaming || !broadcastCorpus
-    val in = (if (inProbe) Spread(incoming) else incoming)
-      .select(col("vec_id").as("in_id"), col("embedding").as("e_i"),
-        norm2(col("embedding")).as("n_i"), bucketArr.as("bks_i"))
-      .select(col("in_id"), col("e_i"), col("n_i"), col("bks_i"),
-        posexplode(col("bks_i")).as(Seq("band", "bucket")))
-    val co0 = Spread(corpus)
-      .select(col("vec_id").as("corpus_id"), col("embedding").as("e_c"),
-        norm2(col("embedding")).as("n_c"), bucketArr.as("bks_c"))
-      .select(col("corpus_id"), col("e_c"), col("n_c"), col("bks_c"),
-        posexplode(col("bks_c")).as(Seq("band_c", "bucket_c")))
-    val co = if (broadcastCorpus && incoming.isStreaming) broadcast(co0) else co0
-    // greatest(band, 1): sequence(1, 0) would be DESCENDING [1, 0] and
-    // element_at(_, 0) throws — the band=0 guard below makes the value
-    // irrelevant, but the expression must stay safe to evaluate eagerly
-    val firstBandOnly = !exists(
-      sequence(lit(1), greatest(col("band"), lit(1))),
-      j => element_at(col("bks_i"), j) === element_at(col("bks_c"), j))
-    // Join direction (guide §3.1 — broadcast the SMALL side): on a BATCH
-    // input the incoming probe set is the small side by construction, so
-    // broadcast IT and stream the corpus — the corpus is never collected
-    // at all (strictly better than broadcasting it at any scale) and the
-    // cosine verify runs at the corpus scan's parallelism. A STREAMING
-    // input cannot be a broadcast build side (stream-static joins must
-    // probe from the stream), so there the static corpus side keeps the
-    // `broadcastCorpus` broadcast-or-shuffle escape hatch.
-    val joined =
-      if (incoming.isStreaming || !broadcastCorpus)
-        in.join(co,
-          col("band") === col("band_c") && col("bucket") === col("bucket_c") &&
-          col("in_id") =!= col("corpus_id"))
-      else
-        co.join(broadcast(in),
-          col("band") === col("band_c") && col("bucket") === col("bucket_c") &&
-          col("in_id") =!= col("corpus_id"))
-    joined
-      .filter(when(col("band") === 0, lit(true)).otherwise(firstBandOnly))
-      .select(col("in_id"), col("corpus_id"),
-        round(dot(col("e_i"), col("e_c")) / (col("n_i") * col("n_c")), 6)
-          .as("cos"))
+                           bitsPerBand: Int = 8): DataFrame =
+    bandJoin(incoming, corpus, "in_id", "corpus_id", Lsh(dim, bands, bitsPerBand))
+      .select(col("in_id"), col("corpus_id"), rcos("q", "c").as("cos"))
       .filter(col("cos") >= tau)
-  }
 
   /** Embedding-cosine near-duplicate pairs, BANDED LSH — the 100 TB shape.
     *
@@ -333,7 +195,7 @@ object SimilarityOps {
                                  dim: Int = 64, bands: Int = 4,
                                  bitsPerBand: Int = 8,
                                  maxBucket: Int = DedupOps.MaxBucket,
-                                 obs: Option[org.apache.spark.sql.Observation] = None): DataFrame = {
+                                 obs: Option[Observation] = None): DataFrame = {
     // candidate side pinned at the job's shuffle parallelism — same
     // rationale as DedupOps.ngramJaccard: the exact-cosine verify is the
     // CPU-heavy stage but candidates are few bytes, and AQE otherwise
@@ -341,25 +203,12 @@ object SimilarityOps {
     val nParts = emb.sparkSession.conf.get("spark.sql.shuffle.partitions").toInt
     val cand = cosineCandidatesBucketed(emb, dim, bands, bitsPerBand,
       maxBucket, obs).repartition(nParts, col("vec_a"))
-    // per-VECTOR norm precomputed in the join projection (norm2 here is
-    // the identical sqrt-of-dot fold, so cos below is bit-identical to
-    // cosine()): the exact verify then folds only ONE dot per candidate
-    // pair instead of three — at any scale the candidate set is ~10-100x
-    // the corpus, so this drops 2/3 of the verify-stage fold work.
     // Spread keeps the verify's probe side at cluster parallelism when
     // the corpus scan is a single small file (same guard as the
-    // candidate stage).
+    // candidate stage)
     val e = Spread(emb.select(col("vec_id"), col("embedding")))
-      .select(col("vec_id"), col("embedding"),
-        norm2(col("embedding")).as("nrm"))
-    cand
-      .join(e.select(col("vec_id").as("vec_a"), col("embedding").as("e_a"),
-        col("nrm").as("n_a")), "vec_a")
-      .join(e.select(col("vec_id").as("vec_b"), col("embedding").as("e_b"),
-        col("nrm").as("n_b")), "vec_b")
-      .select(col("vec_a"), col("vec_b"),
-        round(dot(col("e_a"), col("e_b")) / (col("n_a") * col("n_b")), 6)
-          .as("cos"))
+    cand.join(side(e, "vec_a", "a"), "vec_a").join(side(e, "vec_b", "b"), "vec_b")
+      .select(col("vec_a"), col("vec_b"), rcos("a", "b").as("cos"))
       .filter(col("cos") >= tau)
   }
 
@@ -371,12 +220,94 @@ object SimilarityOps {
   def cosineCandidatesBucketed(emb: DataFrame, dim: Int = 64, bands: Int = 4,
                                bitsPerBand: Int = 8,
                                maxBucket: Int = DedupOps.MaxBucket,
-                               obs: Option[org.apache.spark.sql.Observation] = None): DataFrame = {
-    val bucketArr = array((0 until bands).map(bd =>
-      lshBucket(col("embedding"), dim, bitsPerBand, firstBit = bd * bitsPerBand)): _*)
-    val tagged = Spread(emb).select(col("vec_id"),
-      posexplode(bucketArr).as(Seq("band", "bucket")))
-    DedupOps.boundedBucketPairs(tagged, Seq("band", "bucket"),
-      "vec_id", "vec_a", "vec_b", maxBucket, "cosine_lsh_buckets", obs)
+                               obs: Option[Observation] = None): DataFrame =
+    DedupOps.boundedBucketPairs(
+      side(Spread(emb), "vec_id", "c", Some(Lsh(dim, bands, bitsPerBand)))
+        .select(col("vec_id"), col("c_band").as("band"), col("c_bucket").as("bucket")),
+      Seq("band", "bucket"), "vec_id", "vec_a", "vec_b", maxBucket,
+      "cosine_lsh_buckets", obs)
+
+  /** One side of a similarity join, columns prefixed `p`: the id (named
+    * `id`), `p_emb` and `p_nrm` — the per-VECTOR norm, so a scored pair
+    * folds one dot, not three. With `lsh`, also the band-bucket array
+    * `p_bks`, exploded to one row per probe (`p_band`, `p_bucket`):
+    *  - every plane folds ONCE per row — the projection array is its own
+    *    column, and the buckets (and masks) read it;
+    *  - `posexplode_outer`: the array always holds bands >= 1 elements, so
+    *    the rows are those of `posexplode`, but InferFiltersFromGenerate
+    *    adds no `size(<array>) > 0` Filter that re-runs every fold;
+    *  - `lsh.multiProbe` (query side only): also carries the weak-bit
+    *    masks `p_mks` and probes each band's flipped bucket as a second
+    *    row. */
+  private def side(df: DataFrame, id: String, p: String,
+                   lsh: Option[Lsh] = None): DataFrame = {
+    val e = col("embedding")
+    val base = Seq(col("vec_id").as(id), e.as(s"${p}_emb"), norm2(e).as(s"${p}_nrm"))
+    lsh.fold(df.select(base: _*)) { case Lsh(dim, bands, bits, multiProbe) =>
+      def perBand(f: Int => Column) = array((0 until bands).map(f): _*)
+      val (prj, bks, mks) = (col("prj"), col(s"${p}_bks"), col(s"${p}_mks"))
+      val keep = Seq(col(id), col(s"${p}_emb"), col(s"${p}_nrm"))
+      val buckets = df.select(base :+ projections(e, dim, bands * bits).as("prj"): _*)
+        .select(keep ++ Seq(perBand(b => lshBucket(prj, bits, b * bits)).as(s"${p}_bks")) ++
+          (if (multiProbe) Seq(perBand(b => lshWeakBitMask(prj, bits, b * bits)).as(s"${p}_mks"))
+           else Nil): _*)
+      val probes = if (!multiProbe) bks else concat(bks,
+        perBand(b => element_at(bks, b + 1).bitwiseXOR(element_at(mks, b + 1))))
+      val band = s"${p}_band"
+      val rows = buckets.select(buckets.columns.toSeq.map(col) :+
+        posexplode_outer(probes).as(Seq(band, s"${p}_bucket")): _*)
+      // the flip probes follow the exact ones: position mod bands is the band
+      if (multiProbe) rows.withColumn(band, col(band) % bands) else rows
+    }
   }
+
+  /** Candidate pairs of `queries` (side "q", id `qId`) and `corpus` (side
+    * "c", id `cId`) colliding in some band, each kept only at its FIRST
+    * matching band: both sides carry their full band-bucket arrays, and a
+    * codegen-friendly exists() checks that no earlier band collided —
+    * equal buckets, or (multi-probe) buckets differing by exactly the
+    * query's mask. Stateless, so it runs unchanged on a stream.
+    *
+    * Join direction (broadcast the SMALL side): a batch `queries` is the
+    * small probe set, so IT is broadcast and the corpus (Spread) streams —
+    * the corpus is never collected and the cosine verify runs at the
+    * corpus scan's parallelism. A STREAMING `queries` cannot be a
+    * broadcast build side (stream-static joins probe from the stream), so
+    * there the raw corpus side is broadcast. */
+  private def bandJoin(queries: DataFrame, corpus: DataFrame, qId: String, cId: String,
+                       lsh: Lsh): DataFrame = {
+    val stream = queries.isStreaming
+    val q = side(queries, qId, "q", Some(lsh))
+    val c = side(if (stream) corpus else Spread(corpus), cId, "c",
+      Some(lsh.copy(multiProbe = false)))
+    val cond = col("q_band") === col("c_band") &&
+      col("q_bucket") === col("c_bucket") && col(qId) =!= col(cId)
+    // greatest(band, 1): sequence(1, 0) would be DESCENDING [1, 0] and
+    // element_at(_, 0) throws — the band = 0 guard makes the value
+    // irrelevant, but the expression must stay safe to evaluate eagerly
+    val earlierBandMatched = exists(sequence(lit(1), greatest(col("q_band"), lit(1))),
+      j => {
+        val x = element_at(col("q_bks"), j).bitwiseXOR(element_at(col("c_bks"), j))
+        if (lsh.multiProbe) x === 0L || x === element_at(col("q_mks"), j) else x === 0L
+      })
+    (if (stream) q.join(broadcast(c), cond) else c.join(broadcast(q), cond))
+      .filter(col("q_band") === 0 || !earlierBandMatched)
+  }
+
+  /** Cosine rounded at 6 decimals from precomputed norms — the identical
+    * expression tree `cosine` builds, hence bit-identical to the oracle's
+    * list_cosine_similarity. */
+  private def rcos(a: Column, b: Column, na: Column, nb: Column): Column =
+    round(dot(a, b) / (na * nb), 6)
+
+  private def rcos(a: String, b: String): Column =
+    rcos(col(s"${a}_emb"), col(s"${b}_emb"), col(s"${a}_nrm"), col(s"${b}_nrm"))
+
+  /** The `k` best `cand` per query_id by `score` desc, ties to the smaller
+    * `cand` (the oracles' ORDER BY score DESC, cand), ranked in `rk`. */
+  private def topK(scored: DataFrame, k: Int, cand: String = "cand_id",
+                   score: String = "cos"): DataFrame =
+    scored.withColumn("rk", row_number().over(
+        Window.partitionBy("query_id").orderBy(col(score).desc, col(cand))))
+      .filter(col("rk") <= k)
 }

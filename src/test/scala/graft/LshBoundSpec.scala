@@ -75,17 +75,16 @@ class LshBoundSpec extends SparkSpec {
     // the driver compares against UNCAPPED DuckDB oracles at sf0.01, so
     // the cap must provably not fire there (round-3 advice: the no-op
     // equivalence above pins only sf0.001)
-    import org.apache.spark.sql.functions.{col, count, lit, max}
+    import org.apache.spark.sql.functions.{array, col, count, lit, max, posexplode_outer}
+    import graft.functions.VectorFunctions.{lshBucket, projections}
     val docs = spark.read.parquet("/root/testdata/sf0.01/documents.parquet")
     val emb = spark.read.parquet("/root/testdata/sf0.01/embeddings.parquet")
     val maxText = DedupOps.minhashSignatures(docs)
       .groupBy("seed", "mh").agg(count(lit(1)).as("n"))
       .agg(max("n")).head().getLong(0)
-    val bucketArr = org.apache.spark.sql.functions.array((0 until 4).map(bd =>
-      graft.functions.VectorFunctions.lshBucket(col("embedding"), 64, 8,
-        firstBit = bd * 8)): _*)
-    val maxEmb = emb.select(org.apache.spark.sql.functions
-        .posexplode(bucketArr).as(Seq("band", "bucket")))
+    val maxEmb = emb.select(projections(col("embedding"), 64, 32).as("p"))
+      .select(posexplode_outer(array((0 until 4).map(bd =>
+        lshBucket(col("p"), 8, from = bd * 8)): _*)).as(Seq("band", "bucket")))
       .groupBy("band", "bucket").agg(count(lit(1)).as("n"))
       .agg(max("n")).head().getLong(0)
     info(s"sf0.01 max bucket sizes: text=$maxText, embedding=$maxEmb, cap=${DedupOps.MaxBucket}")

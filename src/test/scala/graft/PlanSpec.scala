@@ -1,5 +1,7 @@
 package graft
 
+import org.apache.spark.sql.catalyst.expressions.{AttributeReference, ZipWith}
+
 /** Plan hygiene: the declarative operators must actually get the Catalyst
   * treatment the 100 TB story depends on — filters and projections pushed
   * into the parquet scan, broadcast joins where hinted, whole-stage
@@ -107,5 +109,30 @@ class PlanSpec extends SparkSpec {
       s"row-local fractions must ride the gram aggregate, not re-scan:\n${plan.take(2000)}")
     assert("HashAggregate".r.findAllIn(plan).size >= 4, // partial+final × 2 keys
       s"expected partial aggregation on both groupBys:\n${plan.take(2000)}")
+  }
+
+  test("LSH projection folds never sit in a Filter; one scan per table side (q36b, q36c, q37b, q37c)") {
+    // a plain posexplode over the bucket array makes InferFiltersFromGenerate
+    // add a `size(array(<every fold>)) > 0` Filter below the Generate,
+    // running each plane fold twice per row. Folds, counted in the
+    // optimized plan (the plan string elides arrays past 25 elements):
+    // each plane once per hashed side (bands x bits, one side for q36b's
+    // candidate stage, two for the joins) — a bucket or mask that
+    // re-embedded the projection array would multiply them. Scans: one
+    // per join side (q36b: the candidate stage plus its two verify sides)
+    Seq(("q36b_embed_neardup_lsh", 3, 4 * 8), ("q36c_neardup_vs_corpus", 2, 2 * 4 * 8),
+        ("q37b_ann_lsh_banded", 2, 2 * 4 * 4), ("q37c_ann_lsh_multiprobe", 2, 2 * 4 * 4))
+      .foreach { case (name, scans, folds) =>
+        val plan = planOf(name)
+        val folded = plan.linesIterator
+          .filter(l => l.contains("Filter") && l.contains("zip_with(embedding")).toSeq
+        assert(folded.isEmpty, s"$name re-runs projection folds in a Filter:\n${folded.mkString("\n").take(2000)}")
+        val n = SparkEntry.queries(name)(spark, sf).queryExecution.optimizedPlan
+          .collect { case node => node.expressions.map(_.collect {
+            case ZipWith(v: AttributeReference, _, _) if v.name == "embedding" => v
+          }.size).sum }.sum
+        assert(n == folds, s"$name folds $n planes, expected $folds")
+        assert("Scan parquet".r.findAllIn(plan).size == scans, s"$name:\n${plan.take(3000)}")
+      }
   }
 }
