@@ -46,9 +46,10 @@ object Bench {
   // untimed as the accuracy reference.
 
   /** Bench scratch space: RAM-backed when available. On a real cluster the
-    * state checkpoints / shuffle land on local NVMe + HDFS; on this box
-    * /tmp is a single ext4 disk whose fsync serializes across state-store
-    * partitions and would masquerade as a scaling ceiling. */
+    * state checkpoints / shuffle land on local NVMe + HDFS. fsync on a
+    * local ext4 /tmp is not a bottleneck for the CEP trigger (a traced run
+    * moved trigger p50 by ~6% between ext4 and /dev/shm); per-file process
+    * forks in Hadoop's local filesystem were, see `graft.fs.LocalFs`. */
   private def scratchBase: String =
     if (java.nio.file.Files.isDirectory(java.nio.file.Paths.get("/dev/shm")))
       "/dev/shm" else System.getProperty("java.io.tmpdir")

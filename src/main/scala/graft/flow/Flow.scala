@@ -105,6 +105,7 @@ object FlowSink {
     // refuse a cross-state-schema resume HERE, with the migration pointer,
     // instead of deep inside the provider's schema check (StateVersion)
     graft.state.StateVersion.checkAndStamp(checkpointDir)
+    graft.fs.LocalFs.install(out.sparkSession)
     val sink = new ExactlyOnceParquetSink(outDir)
     val q = out.writeStream
       .outputMode("append")
@@ -120,7 +121,8 @@ object FlowSink {
     * one pass over the micro-batch, multiple idempotent sinks. `persist`
     * keeps the shared scan single. */
   def fanOut[O](out: Dataset[O], checkpointDir: String,
-      sinks: Map[String, ExactlyOnceParquetSink]): StreamingQuery =
+      sinks: Map[String, ExactlyOnceParquetSink]): StreamingQuery = {
+    graft.fs.LocalFs.install(out.sparkSession)
     out.writeStream
       .outputMode("append")
       .option("checkpointLocation", checkpointDir)
@@ -131,4 +133,5 @@ object FlowSink {
       }
       .trigger(Trigger.AvailableNow())
       .start()
+  }
 }

@@ -1,0 +1,87 @@
+package graft.fs
+
+import java.io.File
+import java.net.URI
+import java.nio.file.Files
+import java.nio.file.attribute.PosixFilePermission
+
+import scala.jdk.CollectionConverters._
+
+import org.apache.hadoop.conf.Configuration
+import org.apache.hadoop.fs.{ChecksumFs, DelegateToFileSystem, FileStatus, FsConstants, FsServerDefaults, Path, RawLocalFileSystem}
+import org.apache.hadoop.fs.local.LocalConfigKeys
+import org.apache.hadoop.fs.permission.FsPermission
+import org.apache.spark.sql.SparkSession
+
+/** Hadoop's local filesystem without a forked process per checkpoint file.
+  *
+  * Without native libhadoop, the stock `RawLocalFileSystem` runs `chmod`
+  * for every `setPermission` (each create and mkdir) and `readlink` for
+  * every `getFileLinkStatus` (each `FileContext.rename` checks its
+  * destination). Spark's streaming checkpoint goes through `FileContext`,
+  * so every state-store delta, offset/commit log entry, `.crc` sidecar
+  * and Spark checksum file cost one or two process forks, and task
+  * threads parked waiting on them. This class makes the same two calls
+  * in-process; everything else, including the files written and their
+  * names, is the stock code path.
+  */
+class InProcessLocalFileSystem extends RawLocalFileSystem {
+
+  /** `Files.setPosixFilePermissions` for plain rwx modes; a mode with the
+    * sticky bit (or any bit above 0777) takes the stock path. A missing
+    * path throws `NoSuchFileException` where the stock `chmod` throws an
+    * `ExitCodeException`; both are `IOException`s. */
+  override def setPermission(p: Path, permission: FsPermission): Unit = {
+    val mode = permission.toShort.toInt
+    if ((mode & ~0x1ff) != 0) super.setPermission(p, permission)
+    else Files.setPosixFilePermissions(pathToFile(p).toPath, posix(mode))
+  }
+
+  // PosixFilePermission.values() runs owner r,w,x then group then others,
+  // i.e. mode bits 8 down to 0
+  private def posix(mode: Int): java.util.Set[PosixFilePermission] =
+    PosixFilePermission.values().zipWithIndex
+      .collect { case (pp, i) if (mode & (1 << (8 - i))) != 0 => pp }
+      .toSet.asJava
+
+  /** The stock method runs `readlink` on `new File(p.toString)` and, when
+    * it prints nothing, returns `getFileStatus(p)`. Only a real symlink
+    * at that same path takes the stock route. */
+  override def getFileLinkStatus(p: Path): FileStatus =
+    if (Files.isSymbolicLink(new File(p.toString).toPath)) super.getFileLinkStatus(p)
+    else getFileStatus(p)
+}
+
+/** `org.apache.hadoop.fs.local.RawLocalFs` over [[InProcessLocalFileSystem]]
+  * (the stock class's constructors are package-private). */
+class RawLocalFs(uri: URI, conf: Configuration)
+    extends DelegateToFileSystem(uri, new InProcessLocalFileSystem, conf,
+      FsConstants.LOCAL_FS_URI.getScheme, false) {
+  override def getUriDefaultPort: Int = -1
+  override def getServerDefaults(f: Path): FsServerDefaults = LocalConfigKeys.getServerDefaults
+  override def getServerDefaults: FsServerDefaults = LocalConfigKeys.getServerDefaults
+  override def isValidName(src: String): Boolean = true
+}
+
+/** `org.apache.hadoop.fs.local.LocalFs` over [[RawLocalFs]]: the same
+  * `ChecksumFs` wrapper, so `.crc` sidecars are written as before. Like the
+  * stock class it ignores `uri` and binds to `file:///`. */
+class LocalFs(uri: URI, conf: Configuration)
+    extends ChecksumFs(new RawLocalFs(FsConstants.LOCAL_FS_URI, conf))
+
+object LocalFs {
+
+  val ImplKey = "fs.AbstractFileSystem.file.impl"
+
+  /** Makes [[LocalFs]] the `file:` `AbstractFileSystem` of `spark`'s
+    * streaming checkpoints, unless an impl is already set: in the session
+    * conf, or in the Hadoop conf by anything other than Hadoop's defaults.
+    * Idempotent; HDFS, S3 and other schemes are untouched. */
+  def install(spark: SparkSession): Unit =
+    if (spark.conf.getOption(ImplKey).isEmpty && !setInHadoopConf(spark))
+      spark.conf.set(ImplKey, classOf[LocalFs].getName)
+
+  private def setInHadoopConf(spark: SparkSession): Boolean =
+    Option(spark.sparkContext.hadoopConfiguration.getPropertySources(ImplKey))
+      .exists(_.exists(_ != "core-default.xml"))
+}

@@ -20,8 +20,14 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * skipped, and an epoch that died mid-write is fully overwritten on retry.
   * Readers see exactly the committed epochs.
   *
-  * At cluster scale the same protocol runs against HDFS/S3 with a
-  * rename-based (or Iceberg snapshot) commit; only `commitMarker` changes.
+  * Only the epoch and generation data go through Spark's parquet writer,
+  * and so through any Hadoop filesystem. The rest uses `java.nio.file` and
+  * so runs on local POSIX paths only: the per-epoch commit marker
+  * (`addBatch`), the generation's `_compacted` high-water flip and
+  * compaction's deletes (`compact` steps 2 and 3), and the marker reads
+  * (`isCommitted`, `committedEpochs`, `compactedUpTo`). Porting these to
+  * Spark's `CheckpointFileManager`, whose `createAtomic` picks rename or
+  * direct put per filesystem, is ROADMAP item 5.
   */
 class ExactlyOnceParquetSink(val dir: String) extends Serializable {
 
@@ -110,8 +116,8 @@ class ExactlyOnceParquetSink(val dir: String) extends Serializable {
     *
     * Safe to run WHILE the stream is live (e.g. from a maintenance thread):
     * epochs committing after step 1's listing stay as epoch dirs until the
-    * next compaction. On HDFS/S3 the same protocol runs with the object
-    * store's atomic-rename/put-if-absent primitive. */
+    * next compaction. Steps 2 and 3 use `java.nio.file` (local POSIX
+    * only; see the class doc). */
   def compact(spark: SparkSession): Unit = {
     val upTo0 = compactedUpTo()
     val tail = committedEpochs().filter(e => upTo0.forall(e > _))

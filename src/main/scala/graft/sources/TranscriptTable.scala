@@ -111,6 +111,7 @@ object TranscriptTable {
   def readStream(spark: SparkSession, dir: String,
                  maxFilesPerTrigger: Option[Int] = None): Dataset[Turn] = {
     import spark.implicits._
+    graft.fs.LocalFs.install(spark)
     val r = spark.readStream.schema(readSchema)
     val r2 = maxFilesPerTrigger.fold(r)(n => r.option("maxFilesPerTrigger", n))
     r2.parquet(dir)

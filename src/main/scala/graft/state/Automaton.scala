@@ -137,6 +137,7 @@ object AutomatonRunner {
       initialState: Option[Dataset[(String, ConvStateRow)]] = None): Dataset[O] = {
     import turns.sparkSession.implicits._
     implicit val stateEnc: Encoder[ConvStateRow] = Encoders.product[ConvStateRow]
+    graft.fs.LocalFs.install(turns.sparkSession)
 
     val func = (key: String, newTurns: Iterator[Turn], gs: GroupState[ConvStateRow]) => {
       val st0 = if (gs.exists) gs.get else EmptyStateRow
@@ -254,6 +255,7 @@ object AutomatonRunner {
       idleGapMs: Long = 30 * 60 * 1000L): Dataset[O] = {
     import org.apache.spark.sql.streaming.TimeMode
     import turns.sparkSession.implicits._
+    graft.fs.LocalFs.install(turns.sparkSession)
     turns
       .withWatermark("ts", watermarkDelay)
       .filter(_.conv_id != AutomatonRunner.SentinelConvId)
