@@ -13,7 +13,7 @@ import org.apache.hadoop.fs.local.LocalConfigKeys
 import org.apache.hadoop.fs.permission.FsPermission
 import org.apache.spark.sql.SparkSession
 
-/** Hadoop's local filesystem without a forked process per checkpoint file.
+/** Hadoop's local filesystem without a forked process per file.
   *
   * Without native libhadoop, the stock `RawLocalFileSystem` runs `chmod`
   * for every `setPermission` (each create and mkdir) and `readlink` for
@@ -21,9 +21,12 @@ import org.apache.spark.sql.SparkSession
   * destination). Spark's streaming checkpoint goes through `FileContext`,
   * so every state-store delta, offset/commit log entry, `.crc` sidecar
   * and Spark checksum file cost one or two process forks, and task
-  * threads parked waiting on them. This class makes the same two calls
-  * in-process; everything else, including the files written and their
-  * names, is the stock code path.
+  * threads parked waiting on them; the sink's parquet writes go through
+  * `FileSystem` and forked a `chmod` per part file, sidecar and committer
+  * dir. This class makes the same two calls in-process; everything else,
+  * including the files written and their names, is the stock code path.
+  * [[LocalFs]] serves it to `FileContext`, [[LocalFileSystem]] to
+  * `FileSystem`.
   */
 class InProcessLocalFileSystem extends RawLocalFileSystem {
 
@@ -52,6 +55,13 @@ class InProcessLocalFileSystem extends RawLocalFileSystem {
     else getFileStatus(p)
 }
 
+/** Hadoop's `FileSystem`-API `LocalFileSystem` over
+  * [[InProcessLocalFileSystem]]: the same `ChecksumFileSystem` wrapper, so
+  * `.crc` sidecars are written as before. The twin of [[LocalFs]] for
+  * code that goes through `FileSystem.get` (the parquet writer and its
+  * output committer) rather than `FileContext`. */
+class LocalFileSystem extends org.apache.hadoop.fs.LocalFileSystem(new InProcessLocalFileSystem)
+
 /** `org.apache.hadoop.fs.local.RawLocalFs` over [[InProcessLocalFileSystem]]
   * (the stock class's constructors are package-private). */
 class RawLocalFs(uri: URI, conf: Configuration)
@@ -72,16 +82,33 @@ class LocalFs(uri: URI, conf: Configuration)
 object LocalFs {
 
   val ImplKey = "fs.AbstractFileSystem.file.impl"
+  val FsImplKey = "fs.file.impl"
 
   /** Makes [[LocalFs]] the `file:` `AbstractFileSystem` of `spark`'s
     * streaming checkpoints, unless an impl is already set: in the session
     * conf, or in the Hadoop conf by anything other than Hadoop's defaults.
     * Idempotent; HDFS, S3 and other schemes are untouched. */
   def install(spark: SparkSession): Unit =
-    if (spark.conf.getOption(ImplKey).isEmpty && !setInHadoopConf(spark))
-      spark.conf.set(ImplKey, classOf[LocalFs].getName)
+    if (!userSet(spark, ImplKey)) spark.conf.set(ImplKey, classOf[LocalFs].getName)
 
-  private def setInHadoopConf(spark: SparkSession): Boolean =
-    Option(spark.sparkContext.hadoopConfiguration.getPropertySources(ImplKey))
-      .exists(_.exists(_ != "core-default.xml"))
+  /** Writer options that make one write job go through
+    * [[LocalFileSystem]]: `fs.file.impl` plus `fs.file.impl.disable.cache`,
+    * because Hadoop's `FileSystem` cache is keyed by scheme, authority and
+    * user, not by conf, and would hand the job the JVM-wide stock instance.
+    * As writer options they reach only that job's Hadoop conf (driver and
+    * tasks), and Hadoop reads them only to resolve `file:` paths, so a
+    * write to HDFS, S3 or another scheme is unchanged. Empty when
+    * `fs.file.impl` is already set, by the same rule as [[install]]. */
+  def writerOptions(spark: SparkSession): Map[String, String] =
+    if (userSet(spark, FsImplKey)) Map.empty
+    else Map(FsImplKey -> classOf[LocalFileSystem].getName,
+      s"$FsImplKey.disable.cache" -> "true")
+
+  /** Set in the session conf, or to a value in the Hadoop conf by anything
+    * but Hadoop's defaults (an unset key keeps its recorded source). */
+  private def userSet(spark: SparkSession, key: String): Boolean = {
+    val hc = spark.sparkContext.hadoopConfiguration
+    spark.conf.getOption(key).isDefined || (hc.get(key) != null &&
+      Option(hc.getPropertySources(key)).exists(_.exists(_ != "core-default.xml")))
+  }
 }

@@ -7,6 +7,8 @@ import scala.jdk.CollectionConverters._
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
+import graft.fs.LocalFs
+
 /** Exactly-once table sink without an Iceberg runtime (SURVEY.md §7.3).
   *
   * Semantics re-created from the reference's delivery contract: a sink may
@@ -19,6 +21,15 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * marker via atomic rename; a re-delivered epoch whose marker exists is
   * skipped, and an epoch that died mid-write is fully overwritten on retry.
   * Readers see exactly the committed epochs.
+  *
+  * An epoch is written by at most `defaultParallelism` tasks (one per
+  * core), not one per state partition: `coalesce` narrows without a
+  * shuffle, so the state partitions run back to back inside each task.
+  * Every write task pays ~25 ms of CPU deserializing its task, mostly the
+  * write job's Hadoop conf, so with small micro-batches the task count,
+  * not the rows, sets the epoch's cost. On `file:` the write job uses
+  * [[graft.fs.LocalFileSystem]], which creates files and dirs without
+  * forking a `chmod` per file.
   *
   * Only the epoch and generation data go through Spark's parquet writer,
   * and so through any Hadoop filesystem. The rest uses `java.nio.file` and
@@ -62,12 +73,20 @@ class ExactlyOnceParquetSink(val dir: String) extends Serializable {
       return
     }
     // overwrite handles a torn previous attempt of this same epoch
-    df.write.mode("overwrite").parquet(epochDir(epochId))
+    write(df, epochDir(epochId))
     Files.createDirectories(commitsDir)
     val tmp = commitsDir.resolve(s".${epochId}.tmp")
     Files.write(tmp, s"epoch=$epochId".getBytes(StandardCharsets.UTF_8))
     Files.move(tmp, marker(epochId), StandardCopyOption.ATOMIC_MOVE,
       StandardCopyOption.REPLACE_EXISTING)
+  }
+
+  /** Every parquet write of the sink (epochs and generations): one task
+    * per core, in-process `file:` permissions. Overwrites `path`. */
+  private def write(df: DataFrame, path: String): Unit = {
+    val spark = df.sparkSession
+    df.coalesce(spark.sparkContext.defaultParallelism).write.mode("overwrite")
+      .options(LocalFs.writerOptions(spark)).parquet(path)
   }
 
   def committedEpochs(): Seq[Long] =
@@ -128,7 +147,7 @@ class ExactlyOnceParquetSink(val dir: String) extends Serializable {
       (upTo0.map(g => spark.read.parquet(genDir(g))).toSeq :+
         spark.read.option("basePath", dir).parquet(tail.map(epochDir): _*))
         .reduce(_.unionByName(_))
-    view.write.mode("overwrite").parquet(genDir(newUpTo))
+    write(view, genDir(newUpTo))
     // step 2: atomic high-water flip
     Files.createDirectories(commitsDir)
     val tmp = commitsDir.resolve(s"._compacted.tmp")

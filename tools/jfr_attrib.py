@@ -3,18 +3,23 @@
 
 Attaches to a running JVM (by default the perfbench JVM, found by its main
 class `perfbench.Main` in /proc) with `jcmd <pid> JFR.start`, records
-`jdk.ProcessStart` and `jdk.ThreadPark` (parks of 1 ms or more) until the
-JVM exits (or for `--seconds`), then prints:
+`jdk.ProcessStart`, `jdk.ThreadPark` (parks of 1 ms or more) and
+`jdk.ExecutionSample` (every 10 ms) until the JVM exits (or for
+`--seconds`), then prints:
 
   * process starts: total, by command, by thread, and by stack;
-  * park time of task threads ("Executor task launch worker ..."), by stack.
+  * park time of task threads ("Executor task launch worker ..."), by stack;
+  * task-thread CPU samples by top non-JDK frame, and the share spent
+    deserializing the task binary (`JavaSerializerInstance.deserialize` under
+    `ResultTask.runTask` or `ShuffleMapTask.runTask`).
 
 Nothing in the JVM or the benchmark changes; start the benchmark, then this:
 
     python3 perfbench/run.py --workload cep_replay --seed 21 --seconds 10 &
     python3 tools/jfr_attrib.py --out /tmp/replay.jfr
 
-`--jfr FILE` reports on an existing recording without attaching.
+`--jfr FILE` reports on an existing recording without attaching (one
+recorded without CPU samples reports 0 of them).
 """
 
 import argparse
@@ -31,6 +36,14 @@ TASK_THREAD = "Executor task launch worker"
 MAIN_CLASS = "perfbench.Main"
 PARK_THRESHOLD_MS = 1
 
+SAMPLE_PERIOD_MS = 10
+# a task's binary (RDD + closure, for a write job its Hadoop conf) is
+# deserialized by this frame called from one of the task types' runTask
+DESERIALIZE = "org.apache.spark.serializer.JavaSerializerInstance.deserialize"
+RUN_TASK = {"org.apache.spark.scheduler.ResultTask.runTask": "ResultTask",
+            "org.apache.spark.scheduler.ShuffleMapTask.runTask": "ShuffleMapTask"}
+JDK = re.compile(r"^(java\.|jdk\.|sun\.|com\.sun\.)")
+
 # frames that say how a process was started or a thread parked, not why
 NOISE = re.compile(r"^(java\.|jdk\.|sun\.|scala\.concurrent\.|org\.apache\.hadoop\.util\.Shell"
                    r"|org\.apache\.spark\.util\.(Spark)?ThreadUtils)")
@@ -45,6 +58,10 @@ JFC = """<?xml version="1.0" encoding="UTF-8"?>
     <setting name="enabled">true</setting>
     <setting name="stackTrace">true</setting>
     <setting name="threshold">%d ms</setting>
+  </event>
+  <event name="jdk.ExecutionSample">
+    <setting name="enabled">true</setting>
+    <setting name="period">%d ms</setting>
   </event>
 </configuration>
 """
@@ -79,7 +96,7 @@ def alive(pid):
 
 def record(pid, out, seconds):
     with tempfile.NamedTemporaryFile("w", suffix=".jfc", delete=False) as f:
-        f.write(JFC % PARK_THRESHOLD_MS)
+        f.write(JFC % (PARK_THRESHOLD_MS, SAMPLE_PERIOD_MS))
         jfc = f.name
     try:
         subprocess.run(["jcmd", str(pid), "JFR.start", "name=jfr_attrib", f"settings={jfc}",
@@ -107,6 +124,97 @@ def load_events(jfr_file):
     return json.loads(p.stdout)["recording"]["events"]
 
 
+def parse_samples(lines):
+    """`jdk.ExecutionSample` events from `jfr print` text output, in the
+    shape of its JSON output (JSON for every sample would be hundreds of MB,
+    so this streams)."""
+    event = frames = None
+    for line in lines:
+        t = line.strip()
+        if t == "jdk.ExecutionSample {":
+            event = {"type": "jdk.ExecutionSample", "values": {}}
+        elif event is None:
+            continue
+        elif t.startswith("sampledThread = "):
+            m = re.match(r'sampledThread = "(.*)" \(javaThreadId', t)
+            event["values"]["sampledThread"] = {"javaName": m.group(1) if m else None}
+        elif t == "stackTrace = [":
+            frames = []
+            event["values"]["stackTrace"] = {"frames": frames, "truncated": False}
+        elif frames is not None and t == "...":
+            event["values"]["stackTrace"]["truncated"] = True
+        elif frames is not None and t == "]":
+            frames = None
+        elif frames is not None and t:
+            cls, _, method = t.split("(", 1)[0].rpartition(".")
+            frames.append({"method": {"type": {"name": cls}, "name": method}})
+        elif t == "}":
+            yield event
+            event = None
+
+
+def load_samples(jfr_file):
+    p = subprocess.Popen(["jfr", "print", "--stack-depth", "64", "--events",
+                          "jdk.ExecutionSample", jfr_file], stdout=subprocess.PIPE, text=True)
+    yield from parse_samples(p.stdout)
+    if p.wait() != 0:
+        raise SystemExit(f"jfr print failed on {jfr_file}")
+
+
+def frame_names(event):
+    frames = ((event.get("values", {}).get("stackTrace") or {}).get("frames")) or []
+    return ["%s.%s" % (f["method"]["type"]["name"].replace("/", "."), f["method"]["name"])
+            for f in frames]
+
+
+def deserializing(names):
+    """The task type whose runTask sits below a task-binary deserialize in
+    this stack (top frame first), or None."""
+    if DESERIALIZE not in names:
+        return None
+    below = names[names.index(DESERIALIZE) + 1:]
+    return next((RUN_TASK[n] for n in below if n in RUN_TASK), None)
+
+
+def summarize_cpu(samples):
+    by_frame, deser = collections.Counter(), collections.Counter()
+    total = truncated = cut_deser = 0
+    for e in samples:
+        v = e.get("values", {})
+        if not ((v.get("sampledThread") or {}).get("javaName") or "").startswith(TASK_THREAD):
+            continue
+        total += 1
+        cut = bool((v.get("stackTrace") or {}).get("truncated"))
+        truncated += cut
+        names = frame_names(e)
+        by_frame[next((n for n in names if not JDK.match(n)), "(JDK frames only)")] += 1
+        kind = deserializing(names)
+        if kind:
+            deser[kind] += 1
+        elif cut and any(n.startswith("java.io.ObjectInputStream.") for n in names):
+            cut_deser += 1
+    return {"task_samples": total, "truncated": truncated, "by_top_frame": by_frame,
+            "deserialize": deser, "truncated_deserialize": cut_deser}
+
+
+def report_cpu(c, top, out=sys.stdout):
+    p = lambda *a: print(*a, file=out)
+    n = c["task_samples"]
+    pct = lambda k: 100.0 * k / n if n else 0.0
+    d = sum(c["deserialize"].values())
+    p(f"task-thread CPU samples: {n} (every {SAMPLE_PERIOD_MS} ms per running thread; "
+      f"{c['truncated']} stacks truncated at 64 frames)")
+    p(f"  under task-binary deserialization: {d} ({pct(d):.1f}%)" +
+      "".join(f", {k} {m}" for k, m in sorted(c["deserialize"].items())))
+    # a stack cut off above runTask cannot be attributed; say how many of
+    # those were deserializing something
+    p(f"  truncated, in java.io.ObjectInputStream, caller cut off: "
+      f"{c['truncated_deserialize']} ({pct(c['truncated_deserialize']):.1f}%)")
+    p("  by top non-JDK frame:")
+    for k, m in c["by_top_frame"].most_common(top):
+        p(f"    {m:8d} {pct(m):5.1f}%  {k}")
+
+
 def seconds_of(duration):
     """JFR JSON durations are ISO-8601, e.g. "PT0.012345S" or "PT1M2.5S"."""
     m = re.fullmatch(r"PT(?:(\d+)H)?(?:(\d+)M)?(?:([\d.]+)S)?", duration or "")
@@ -123,9 +231,7 @@ def thread_group(name):
 
 
 def stack_key(event, depth):
-    frames = ((event.get("values", {}).get("stackTrace") or {}).get("frames")) or []
-    names = ["%s.%s" % (f["method"]["type"]["name"].replace("/", "."), f["method"]["name"])
-             for f in frames]
+    names = frame_names(event)
     i = 0
     while i < len(names) and NOISE.match(names[i]):
         i += 1
@@ -187,6 +293,7 @@ def main():
         print(f"# recording pid {pid} to {jfr_file}", file=sys.stderr)
         record(pid, jfr_file, a.seconds)
     report(summarize(load_events(jfr_file), a.depth), a.top)
+    report_cpu(summarize_cpu(load_samples(jfr_file)), a.top)
 
 
 if __name__ == "__main__":

@@ -73,5 +73,97 @@ class JfrAttribTest(unittest.TestCase):
         self.assertIn("task-thread park: 0.8 s in 2 parks", out.getvalue())
 
 
+DESER = [frame("org/apache/hadoop/conf/Configuration", "readFields"),
+         frame("org/apache/spark/util/SerializableConfiguration", "readObject"),
+         frame("java/io/ObjectInputStream", "readObject"),
+         frame("org/apache/spark/serializer/JavaSerializerInstance", "deserialize"),
+         frame("org/apache/spark/scheduler/ResultTask", "runTask"),
+         frame("org/apache/spark/scheduler/Task", "run")]
+WRITE = [frame("java/util/HashMap", "put"),
+         frame("org/apache/hadoop/mapred/JobConf", "<init>"),
+         frame("org/apache/spark/sql/execution/datasources/FileFormatWriter$", "executeTask"),
+         frame("org/apache/spark/scheduler/ResultTask", "runTask")]
+# a deserialize NOT under runTask (e.g. a fetched shuffle block) does not count
+FETCH = [frame("java/io/ObjectInputStream", "readObject"),
+         frame("org/apache/spark/serializer/JavaSerializerInstance", "deserialize"),
+         frame("org/apache/spark/storage/BlockManager", "getRemoteValues")]
+MAP_DESER = [frame("org/apache/spark/serializer/JavaSerializerInstance", "deserialize"),
+             frame("org/apache/spark/scheduler/ShuffleMapTask", "runTask")]
+
+TEXT = """\
+jdk.ExecutionSample {
+  startTime = 18:53:27.123
+  sampledThread = "Executor task launch worker for task 3.0 in stage 1.0 (TID 7)" (javaThreadId = 80)
+  state = "STATE_RUNNABLE"
+  stackTrace = [
+    org.apache.hadoop.conf.Configuration.readFields(DataInput) line: 3912
+    org.apache.spark.serializer.JavaSerializerInstance.deserialize(ByteBuffer, ClassLoader, ClassTag) line: 123
+    org.apache.spark.scheduler.ResultTask.runTask(TaskContext) line: 85
+    ...
+  ]
+}
+
+jdk.ExecutionSample {
+  startTime = 18:53:27.133
+  sampledThread = "main" (javaThreadId = 1)
+  state = "STATE_RUNNABLE"
+  stackTrace = [
+    java.lang.Thread.sleep(long)
+  ]
+}
+"""
+
+
+def sample(thread, frames):
+    return {"type": "jdk.ExecutionSample",
+            "values": {"sampledThread": {"javaName": thread}, "stackTrace": {"frames": frames}}}
+
+
+class CpuSamplesTest(unittest.TestCase):
+
+    def test_summarize_cpu_counts_task_threads_and_deserialization(self):
+        task = "Executor task launch worker for task %d.0"
+        samples = ([sample(task % i, DESER) for i in range(3)] +
+                   [sample(task % 9, MAP_DESER)] +
+                   [sample(task % 4, WRITE)] * 2 +
+                   [sample(task % 5, FETCH)] +
+                   [sample("stream execution thread", DESER)] * 5)
+        c = jfr_attrib.summarize_cpu(samples)
+        self.assertEqual(c["task_samples"], 7)
+        self.assertEqual(dict(c["deserialize"]), {"ResultTask": 3, "ShuffleMapTask": 1})
+        self.assertEqual(c["by_top_frame"]["org.apache.hadoop.conf.Configuration.readFields"], 3)
+        self.assertEqual(c["by_top_frame"]["org.apache.hadoop.mapred.JobConf.<init>"], 2)
+        self.assertEqual(c["by_top_frame"][
+            "org.apache.spark.serializer.JavaSerializerInstance.deserialize"], 2)
+        out = io.StringIO()
+        jfr_attrib.report_cpu(c, top=5, out=out)
+        self.assertIn("under task-binary deserialization: 4 (57.1%), ResultTask 3, "
+                      "ShuffleMapTask 1", out.getvalue())
+
+    def test_parse_samples_reads_jfr_print_text(self):
+        got = list(jfr_attrib.parse_samples(io.StringIO(TEXT)))
+        self.assertEqual(len(got), 2)
+        v = got[0]["values"]
+        self.assertEqual(v["sampledThread"]["javaName"],
+                         "Executor task launch worker for task 3.0 in stage 1.0 (TID 7)")
+        self.assertTrue(v["stackTrace"]["truncated"])
+        self.assertEqual(jfr_attrib.frame_names(got[0]), [
+            "org.apache.hadoop.conf.Configuration.readFields",
+            "org.apache.spark.serializer.JavaSerializerInstance.deserialize",
+            "org.apache.spark.scheduler.ResultTask.runTask"])
+        self.assertEqual(jfr_attrib.deserializing(jfr_attrib.frame_names(got[0])), "ResultTask")
+        self.assertFalse(got[1]["values"]["stackTrace"]["truncated"])
+        c = jfr_attrib.summarize_cpu(got)
+        self.assertEqual((c["task_samples"], c["truncated"]), (1, 1))
+
+    def test_truncated_deserialization_is_counted_apart(self):
+        cut = sample("Executor task launch worker for task 1.0", DESER[:3])
+        cut["values"]["stackTrace"]["truncated"] = True
+        whole = sample("Executor task launch worker for task 2.0", DESER[:3])
+        c = jfr_attrib.summarize_cpu([cut, whole])
+        self.assertEqual(dict(c["deserialize"]), {})
+        self.assertEqual(c["truncated_deserialize"], 1)
+
+
 if __name__ == "__main__":
     unittest.main()
