@@ -2,7 +2,8 @@ package graft.state
 
 import scala.reflect.ClassTag
 
-import org.apache.spark.sql.{Dataset, Encoder, Encoders}
+import org.apache.spark.sql.{Dataset, Encoder, Encoders, KeyValueGroupedDataset}
+import org.apache.spark.sql.functions.col
 import org.apache.spark.sql.catalyst.encoders.ExpressionEncoder
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 
@@ -140,34 +141,34 @@ object AutomatonRunner {
     graft.fs.LocalFs.install(turns.sparkSession)
 
     val func = (key: String, newTurns: Iterator[Turn], gs: GroupState[ConvStateRow]) => {
-      val st0 = if (gs.exists) gs.get else EmptyStateRow
-      val (s0, buffered) = decodeState(a, st0)
+      // end-of-stream sentinel rows only exist to push the watermark past
+      // all real data (finite-stream drain, the reference's quiesce); they
+      // reach the state function but never user state
+      if (key == SentinelConvId) Iterator.empty
+      else {
+        val st0 = if (gs.exists) gs.get else EmptyStateRow
+        val (s0, buffered) = decodeState(a, st0)
 
-      if (gs.hasTimedOut) {
-        val out = flushKey(a, st0, s0, buffered)
-        gs.remove()
-        out.iterator
-      } else {
-        val (st1, out) = stepKey(a, st0, s0, buffered, newTurns,
-          gs.getCurrentWatermarkMs())
-        gs.update(st1)
-        // evict when the watermark passes last activity + idle gap
-        // (clamped above the current watermark — Spark rejects a
-        // timeout that is already in the past)
-        if (st1.maxSeenTs != Long.MinValue)
-          gs.setTimeoutTimestamp(
-            math.max(st1.maxSeenTs + idleGapMs, gs.getCurrentWatermarkMs() + 1))
-        out.iterator
+        if (gs.hasTimedOut) {
+          val out = flushKey(a, st0, s0, buffered)
+          gs.remove()
+          out.iterator
+        } else {
+          val (st1, out) = stepKey(a, st0, s0, buffered, newTurns,
+            gs.getCurrentWatermarkMs())
+          gs.update(st1)
+          // evict when the watermark passes last activity + idle gap
+          // (clamped above the current watermark — Spark rejects a
+          // timeout that is already in the past)
+          if (st1.maxSeenTs != Long.MinValue)
+            gs.setTimeoutTimestamp(
+              math.max(st1.maxSeenTs + idleGapMs, gs.getCurrentWatermarkMs() + 1))
+          out.iterator
+        }
       }
     }
 
-    val grouped = turns
-      .withWatermark("ts", watermarkDelay)
-      // end-of-stream sentinel rows only exist to push the watermark past
-      // all real data (finite-stream drain, the reference's quiesce); they
-      // never reach user state
-      .filter(_.conv_id != AutomatonRunner.SentinelConvId)
-      .groupByKey(_.conv_id)
+    val grouped = keyed(turns, watermarkDelay)
     initialState match {
       case Some(init) =>
         grouped.flatMapGroupsWithState(OutputMode.Append,
@@ -177,6 +178,21 @@ object AutomatonRunner {
         grouped.flatMapGroupsWithState(OutputMode.Append,
           GroupStateTimeout.EventTimeTimeout)(func)
     }
+  }
+
+  /** Watermark, then group by the `conv_id` column: the map side is scan ->
+    * watermark -> exchange over rows, with no per-row Turn deserialization
+    * and one key per shuffled row (`groupByKey(_.conv_id)` would add a
+    * deserialize + `AppendColumns` and ship the key twice). Both streaming
+    * runtimes drop the sentinel inside their state function instead of
+    * filtering here: Catalyst pushes a Column predicate on `conv_id` below
+    * the watermark, so sentinels would stop advancing it and the finite
+    * drain would no longer complete conversations (CLAUDE.md invariants 4
+    * and 16). */
+  private def keyed(turns: Dataset[Turn], watermarkDelay: String)
+      : KeyValueGroupedDataset[String, Turn] = {
+    import turns.sparkSession.implicits._
+    turns.withWatermark("ts", watermarkDelay).groupBy(col("conv_id")).as[String, Turn]
   }
 
   /** The per-key micro-batch step, shared verbatim by BOTH streaming
@@ -254,12 +270,8 @@ object AutomatonRunner {
       watermarkDelay: String = "10 minutes",
       idleGapMs: Long = 30 * 60 * 1000L): Dataset[O] = {
     import org.apache.spark.sql.streaming.TimeMode
-    import turns.sparkSession.implicits._
     graft.fs.LocalFs.install(turns.sparkSession)
-    turns
-      .withWatermark("ts", watermarkDelay)
-      .filter(_.conv_id != AutomatonRunner.SentinelConvId)
-      .groupByKey(_.conv_id)
+    keyed(turns, watermarkDelay)
       .transformWithState(new ConvProcessor[S, O](a, idleGapMs),
         TimeMode.EventTime(), OutputMode.Append())
   }
@@ -283,6 +295,8 @@ object AutomatonRunner {
 
     override def handleInputRows(key: String, rows: Iterator[Turn],
                                  timerValues: TimerValues): Iterator[O] = {
+      // drain sentinel: drives the watermark only (see runStreaming)
+      if (key == SentinelConvId) return Iterator.empty
       val st0 = if (state.exists()) state.get() else EmptyStateRow
       val (s0, buffered) = decodeState(a, st0)
       val (st1, out) = stepKey(a, st0, s0, buffered, rows,

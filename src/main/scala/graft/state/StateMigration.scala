@@ -2,6 +2,7 @@ package graft.state
 
 import org.apache.spark.sql.{Dataset, Encoder, SparkSession}
 import org.apache.spark.sql.functions.{col, lit}
+import org.apache.spark.sql.types.StructType
 
 import graft.model.Turn
 import graft.state.AutomatonRunner.ConvStateRow
@@ -57,8 +58,11 @@ object StateMigration {
     // locations; in a session that has never run a StreamingQuery the
     // endpoint does not exist yet — create it (lazily, idempotent)
     org.apache.spark.sql.graftbridge.Bridge.ensureStateStoreCoordinator(spark)
-    val gs = spark.read.format("statestore").load(ckptDir)
-      .select(col("key.value").as("k"), col("value.groupState.*"))
+    val raw = spark.read.format("statestore").load(ckptDir)
+    // the key struct's one field is named after the grouping attribute the
+    // checkpoint was created under: `value` (groupByKey) or `conv_id`
+    val keyField = raw.schema("key").dataType.asInstanceOf[StructType].fieldNames.head
+    val gs = raw.select(col("key").getField(keyField).as("k"), col("value.groupState.*"))
     // v1 rows have no timerTs; a v2 row's timerTs points at a timer in the
     // OLD checkpoint's timer store — either way the new store owns no such
     // timer yet, so the migrated row always starts unarmed (0)

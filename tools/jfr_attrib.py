@@ -11,7 +11,13 @@ class `perfbench.Main` in /proc) with `jcmd <pid> JFR.start`, records
   * park time of task threads ("Executor task launch worker ..."), by stack;
   * task-thread CPU samples by top non-JDK frame, and the share spent
     deserializing the task binary (`JavaSerializerInstance.deserialize` under
-    `ResultTask.runTask` or `ShuffleMapTask.runTask`).
+    `ResultTask.runTask` or `ShuffleMapTask.runTask`);
+  * per perfbench leg (warm, live, cores, c1; "rest" is everything outside
+    a drain, such as set-up and the output check): task-thread CPU samples
+    split into `ShuffleMapTask` and `ResultTask`, and task-thread park time
+    inside a task (an idle pool thread parks in JDK frames only).
+    The legs are the drain windows in the run's `events.jsonl`, which the
+    benchmark writes to its `--work` directory when it exits.
 
 Nothing in the JVM or the benchmark changes; start the benchmark, then this:
 
@@ -19,11 +25,13 @@ Nothing in the JVM or the benchmark changes; start the benchmark, then this:
     python3 tools/jfr_attrib.py --out /tmp/replay.jfr
 
 `--jfr FILE` reports on an existing recording without attaching (one
-recorded without CPU samples reports 0 of them).
+recorded without CPU samples reports 0 of them); add `--events
+.bench_work/<run>/events.jsonl` for the per-leg split.
 """
 
 import argparse
 import collections
+import datetime
 import json
 import os
 import re
@@ -68,7 +76,8 @@ JFC = """<?xml version="1.0" encoding="UTF-8"?>
 
 
 def find_pid(match, timeout_s=120):
-    """First java pid with `match` among its arguments, waiting up to timeout_s."""
+    """(pid, argv) of the first java process with `match` among its
+    arguments, waiting up to timeout_s."""
     deadline = time.time() + timeout_s
     me = os.getpid()
     while time.time() < deadline:
@@ -81,7 +90,7 @@ def find_pid(match, timeout_s=120):
             except OSError:
                 continue
             if argv and os.path.basename(argv[0]) == b"java" and match.encode() in argv:
-                return int(d)
+                return int(d), [x.decode() for x in argv]
         time.sleep(0.2)
     raise SystemExit(f"no java process with argument {match!r} within {timeout_s}s")
 
@@ -135,6 +144,8 @@ def parse_samples(lines):
             event = {"type": "jdk.ExecutionSample", "values": {}}
         elif event is None:
             continue
+        elif t.startswith("startTime = "):
+            event["values"]["startTime"] = t[len("startTime = "):]
         elif t.startswith("sampledThread = "):
             m = re.match(r'sampledThread = "(.*)" \(javaThreadId', t)
             event["values"]["sampledThread"] = {"javaName": m.group(1) if m else None}
@@ -176,9 +187,52 @@ def deserializing(names):
     return next((RUN_TASK[n] for n in below if n in RUN_TASK), None)
 
 
-def summarize_cpu(samples):
+def task_type(names, cut):
+    """The task type whose runTask is on this stack; "truncated" when the
+    stack was cut off before any runTask frame."""
+    return next((RUN_TASK[n] for n in names if n in RUN_TASK), "truncated" if cut else "other")
+
+
+def load_legs(path):
+    """Drain windows of a perfbench run, [(start_ms, end_ms, leg)], from its
+    events.jsonl; drains of the traced pass are "<leg> traced"."""
+    legs = []
+    with open(path) as f:
+        for line in f:
+            e = json.loads(line)
+            if e.get("kind") == "drain":
+                legs.append((e["start"], e["end"], e["leg"] + (" traced" if e.get("traced") else "")))
+    return sorted(legs)
+
+
+def leg_at(legs, t_ms):
+    return next((leg for start, end, leg in legs if start <= t_ms <= end), "rest")
+
+
+DAY_MS = 86400000
+EPOCH_ORDINAL = datetime.date(1970, 1, 1).toordinal()
+
+
+def epoch_ms(stamp, ref_ms):
+    """Epoch ms of a JFR start time: UTC ISO-8601 in `jfr print --json`
+    ("2026-10-18T02:52:30.758131490Z"), or a UTC time of day in its text
+    output ("02:52:30.177"), taken on the day that puts it nearest ref_ms."""
+    m = re.fullmatch(r"(?:(\d{4}-\d\d-\d\d)T)?(\d\d):(\d\d):(\d\d)(?:\.(\d+))?Z?", stamp or "")
+    if not m:
+        return None
+    date, h, mi, s, frac = m.groups()
+    ms = ((int(h) * 60 + int(mi)) * 60 + int(s)) * 1000 + int((frac or "0")[:3].ljust(3, "0"))
+    if date:
+        return (datetime.date.fromisoformat(date).toordinal() - EPOCH_ORDINAL) * DAY_MS + ms
+    day = ref_ms - ref_ms % DAY_MS
+    return min((day + k * DAY_MS + ms for k in (-1, 0, 1)), key=lambda t: abs(t - ref_ms))
+
+
+def summarize_cpu(samples, legs=()):
     by_frame, deser = collections.Counter(), collections.Counter()
+    by_leg, cut_io_by_leg = collections.Counter(), collections.Counter()
     total = truncated = cut_deser = 0
+    ref = legs[0][0] if legs else 0
     for e in samples:
         v = e.get("values", {})
         if not ((v.get("sampledThread") or {}).get("javaName") or "").startswith(TASK_THREAD):
@@ -189,12 +243,18 @@ def summarize_cpu(samples):
         names = frame_names(e)
         by_frame[next((n for n in names if not JDK.match(n)), "(JDK frames only)")] += 1
         kind = deserializing(names)
+        cut_io = not kind and cut and any(n.startswith("java.io.ObjectInputStream.")
+                                          for n in names)
         if kind:
             deser[kind] += 1
-        elif cut and any(n.startswith("java.io.ObjectInputStream.") for n in names):
-            cut_deser += 1
+        cut_deser += cut_io
+        if legs:
+            leg = leg_at(legs, epoch_ms(v.get("startTime"), ref) or 0)
+            by_leg[leg, task_type(names, cut)] += 1
+            cut_io_by_leg[leg] += cut_io
     return {"task_samples": total, "truncated": truncated, "by_top_frame": by_frame,
-            "deserialize": deser, "truncated_deserialize": cut_deser}
+            "deserialize": deser, "truncated_deserialize": cut_deser, "by_leg": by_leg,
+            "truncated_deserialize_by_leg": cut_io_by_leg}
 
 
 def report_cpu(c, top, out=sys.stdout):
@@ -230,18 +290,22 @@ def thread_group(name):
     return re.sub(r"\d+", "#", re.sub(r"\[.*\]", "[...]", name or "?"))
 
 
+IDLE = ("(JDK frames only)",)
+
+
 def stack_key(event, depth):
     names = frame_names(event)
     i = 0
     while i < len(names) and NOISE.match(names[i]):
         i += 1
-    return tuple(names[i:i + depth]) or ("(JDK frames only)",)
+    return tuple(names[i:i + depth]) or IDLE
 
 
-def summarize(events, depth):
+def summarize(events, depth, legs=()):
     forks_cmd, forks_thread, forks_stack = (collections.Counter() for _ in range(3))
-    park_s, park_n = collections.Counter(), collections.Counter()
+    park_s, park_n, park_leg_s = (collections.Counter() for _ in range(3))
     forks = 0
+    ref = legs[0][0] if legs else 0
     for e in events:
         v = e.get("values", {})
         thread = (v.get("eventThread") or {}).get("javaName")
@@ -255,8 +319,14 @@ def summarize(events, depth):
             k = stack_key(e, depth)
             park_s[k] += seconds_of(v.get("duration"))
             park_n[k] += 1
+            # an idle pool thread waiting for its next task parks in JDK
+            # frames only; the per-leg column counts waits inside a task
+            if legs and k != IDLE:
+                park_leg_s[leg_at(legs, epoch_ms(v.get("startTime"), ref) or 0)] += \
+                    seconds_of(v.get("duration"))
     return {"forks": forks, "forks_by_command": forks_cmd, "forks_by_thread": forks_thread,
-            "forks_by_stack": forks_stack, "task_park_s": park_s, "task_park_n": park_n}
+            "forks_by_stack": forks_stack, "task_park_s": park_s, "task_park_n": park_n,
+            "task_park_s_by_leg": park_leg_s}
 
 
 def report(s, top, out=sys.stdout):
@@ -277,23 +347,55 @@ def report(s, top, out=sys.stdout):
         p(f"    {sec:8.2f} s {s['task_park_n'][k]:7d}x  " + "\n                        <- ".join(k))
 
 
+LEG_ORDER = ("warm", "live", "cores", "c1")
+
+
+def report_legs(c, s, out=sys.stdout):
+    """Task-thread CPU samples and park time per perfbench leg."""
+    p = lambda *a: print(*a, file=out)
+    by = c["by_leg"]
+    legs = {leg for leg, _ in by} | set(s["task_park_s_by_leg"])
+    rank = lambda leg: (LEG_ORDER.index(leg.split()[0]) if leg.split()[0] in LEG_ORDER
+                        else len(LEG_ORDER), leg)
+    n_all = c["task_samples"]
+    p("per leg (task threads; drain windows from events.jsonl, rest = outside every drain):")
+    p(f"  {'leg':14s} {'samples':>8s} {'of all':>7s} {'ShuffleMap':>11s} {'Result':>7s} "
+      f"{'cut':>6s} {'cut ObjIn':>10s} {'park s':>8s}  (park: in a task, not idle)")
+    for leg in sorted(legs, key=rank):
+        n = sum(m for (lg, _), m in by.items() if lg == leg)
+        pct = lambda m: f"{100.0 * m / n:.1f}%" if n else "-"
+        p(f"  {leg:14s} {n:8d} {100.0 * n / n_all if n_all else 0.0:6.1f}% "
+          f"{pct(by[leg, 'ShuffleMapTask']):>11s} {pct(by[leg, 'ResultTask']):>7s} "
+          f"{pct(by[leg, 'truncated']):>6s} {pct(c['truncated_deserialize_by_leg'][leg]):>10s} "
+          f"{s['task_park_s_by_leg'][leg]:8.1f}")
+
+
 def main():
     ap = argparse.ArgumentParser(description=__doc__.split("\n\n")[0])
     ap.add_argument("--pid", type=int, help="JVM to attach to (default: the perfbench JVM)")
     ap.add_argument("--seconds", type=float, help="stop recording after this long")
     ap.add_argument("--out", default="jfr_attrib.jfr", help="recording file to write")
     ap.add_argument("--jfr", help="report on this recording instead of attaching")
+    ap.add_argument("--events", help="the run's events.jsonl, for the per-leg split "
+                    "(default when attaching: the one in the benchmark's --work dir)")
     ap.add_argument("--depth", type=int, default=6, help="frames per stack")
     ap.add_argument("--top", type=int, default=10)
     a = ap.parse_args()
-    jfr_file = a.jfr
+    jfr_file, events = a.jfr, a.events
     if jfr_file is None:
-        pid = a.pid or find_pid(MAIN_CLASS)
+        pid, argv = (a.pid, []) if a.pid else find_pid(MAIN_CLASS)
+        if events is None and "--work" in argv[:-1]:
+            events = os.path.join(argv[argv.index("--work") + 1], "events.jsonl")
         jfr_file = os.path.abspath(a.out)
         print(f"# recording pid {pid} to {jfr_file}", file=sys.stderr)
         record(pid, jfr_file, a.seconds)
-    report(summarize(load_events(jfr_file), a.depth), a.top)
-    report_cpu(summarize_cpu(load_samples(jfr_file)), a.top)
+    legs = load_legs(events) if events and os.path.exists(events) else []
+    s = summarize(load_events(jfr_file), a.depth, legs)
+    c = summarize_cpu(load_samples(jfr_file), legs)
+    report(s, a.top)
+    report_cpu(c, a.top)
+    if legs:
+        report_legs(c, s)
 
 
 if __name__ == "__main__":

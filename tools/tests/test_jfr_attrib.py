@@ -1,6 +1,8 @@
 import io
+import json
 import os
 import sys
+import tempfile
 import unittest
 
 sys.path.insert(0, os.path.join(os.path.dirname(__file__), ".."))
@@ -163,6 +165,106 @@ class CpuSamplesTest(unittest.TestCase):
         c = jfr_attrib.summarize_cpu([cut, whole])
         self.assertEqual(dict(c["deserialize"]), {})
         self.assertEqual(c["truncated_deserialize"], 1)
+
+
+# 2026-10-18T02:00:00Z
+T0 = 1792288800000
+SCAN = [frame("org/apache/spark/sql/execution/streaming/runtime/EventTimeWatermarkExec", "x"),
+        frame("org/apache/spark/scheduler/ShuffleMapTask", "runTask")]
+STATE = [frame("org/apache/spark/sql/execution/streaming/state/RocksDB", "put"),
+         frame("org/apache/spark/scheduler/ResultTask", "runTask")]
+
+
+def at(event, ms, key="startTime"):
+    """`event` stamped T0 + ms the way `jfr print` text output stamps samples."""
+    t = (T0 + ms) % jfr_attrib.DAY_MS
+    event["values"][key] = "%02d:%02d:%02d.%03d" % (t // 3600000, t // 60000 % 60,
+                                                   t // 1000 % 60, t % 1000)
+    return event
+
+
+class LegSplitTest(unittest.TestCase):
+
+    def events_file(self, rows):
+        fd, path = tempfile.mkstemp(suffix=".jsonl")
+        with os.fdopen(fd, "w") as f:
+            for r in rows:
+                f.write(json.dumps(r) + "\n")
+        self.addCleanup(os.unlink, path)
+        return path
+
+    def test_epoch_ms(self):
+        self.assertEqual(jfr_attrib.epoch_ms("2026-10-18T02:00:00.250999999Z", 0), T0 + 250)
+        self.assertEqual(jfr_attrib.epoch_ms("02:00:01.5", T0), T0 + 1500)
+        # a time of day just after midnight belongs to the day after a
+        # reference just before it, and the reverse
+        self.assertEqual(jfr_attrib.epoch_ms("00:00:00.100", T0 - 2 * 3600000 - 100),
+                         T0 - 2 * 3600000 + 100)
+        self.assertEqual(jfr_attrib.epoch_ms("23:59:59.900", T0 - 2 * 3600000 + 100),
+                         T0 - 2 * 3600000 - 100)
+        self.assertIsNone(jfr_attrib.epoch_ms(None, T0))
+
+    def test_load_legs_reads_drain_windows(self):
+        path = self.events_file([
+            {"kind": "setup", "seconds": 3.0},
+            {"kind": "drain", "tag": "c1-0", "leg": "c1", "pass": 0, "traced": False,
+             "start": T0 + 5000, "end": T0 + 6000},
+            {"kind": "drain", "tag": "warm", "leg": "warm", "pass": -1, "traced": False,
+             "start": T0, "end": T0 + 1000},
+            {"kind": "drain", "tag": "cores-1-0", "leg": "cores", "pass": 1, "traced": True,
+             "start": T0 + 7000, "end": T0 + 8000},
+            {"kind": "batch", "tag": "warm", "start": T0, "end": T0 + 10},
+        ])
+        legs = jfr_attrib.load_legs(path)
+        self.assertEqual(legs, [(T0, T0 + 1000, "warm"), (T0 + 5000, T0 + 6000, "c1"),
+                                (T0 + 7000, T0 + 8000, "cores traced")])
+        self.assertEqual(jfr_attrib.leg_at(legs, T0 + 5500), "c1")
+        self.assertEqual(jfr_attrib.leg_at(legs, T0 + 3000), "rest")
+
+    def test_split_by_leg_and_task_type(self):
+        legs = [(T0, T0 + 1000, "warm"), (T0 + 2000, T0 + 4000, "cores"),
+                (T0 + 5000, T0 + 6000, "c1")]
+        task = "Executor task launch worker for task %d.0"
+        cut = sample(task % 8, DESER[:3])
+        cut["values"]["stackTrace"]["truncated"] = True
+        deep = sample(task % 9, [frame("org/rocksdb/RocksDB", "get")])
+        deep["values"]["stackTrace"]["truncated"] = True
+        samples = ([at(sample(task % 1, SCAN), 500)] +
+                   [at(sample(task % 2, SCAN), 2000 + i) for i in range(3)] +
+                   [at(sample(task % 3, STATE), 3999)] +
+                   [at(cut, 3000), at(deep, 3001)] +
+                   [at(sample(task % 4, MAP_DESER), 5500)] +
+                   [at(sample(task % 5, WRITE), 4500)] +
+                   [at(sample("stream execution thread", SCAN), 2500)])
+        c = jfr_attrib.summarize_cpu(samples, legs)
+        self.assertEqual(c["task_samples"], 9)
+        self.assertEqual(c["truncated_deserialize"], 1)
+        by = c["by_leg"]
+        self.assertEqual((by["warm", "ShuffleMapTask"], by["warm", "ResultTask"]), (1, 0))
+        self.assertEqual((by["cores", "ShuffleMapTask"], by["cores", "ResultTask"],
+                          by["cores", "truncated"]), (3, 1, 2))
+        self.assertEqual(dict(c["truncated_deserialize_by_leg"]),
+                         {"warm": 0, "cores": 1, "c1": 0, "rest": 0})
+        self.assertEqual(by["c1", "ShuffleMapTask"], 1)
+        self.assertEqual(by["rest", "ResultTask"], 1)
+
+        parks = [at(event("jdk.ThreadPark", task % 1, AWAIT, duration="PT0.5S"), 2500),
+                 at(event("jdk.ThreadPark", task % 2, AWAIT, duration="PT0.25S"), 9000),
+                 at(event("jdk.ThreadPark", "driver-heartbeater", AWAIT, duration="PT9S"), 2500),
+                 # an idle pool thread waiting for a task
+                 at(event("jdk.ThreadPark", task % 3, AWAIT[:2], duration="PT4S"), 2500)]
+        s = jfr_attrib.summarize(parks, depth=2, legs=legs)
+        self.assertEqual(dict(s["task_park_s_by_leg"]), {"cores": 0.5, "rest": 0.25})
+
+        out = io.StringIO()
+        jfr_attrib.report_legs(c, s, out=out)
+        rows = [r.split() for r in out.getvalue().splitlines()[2:]]
+        self.assertEqual([r[0] for r in rows], ["warm", "cores", "c1", "rest"])
+        # cores: 6 samples of 9; 3 map, 1 result, 2 cut (1 of them in
+        # ObjectInputStream), 0.5 s parked
+        self.assertEqual(rows[1], ["cores", "6", "66.7%", "50.0%", "16.7%", "33.3%", "16.7%",
+                                   "0.5"])
+        self.assertEqual(rows[3][-1], "0.2")
 
 
 if __name__ == "__main__":
