@@ -54,10 +54,6 @@ object Flow {
       if (ds.isStreaming) AutomatonRunner.runStreaming(ds, a)
       else AutomatonRunner.runBatch(ds, a))
 
-  def statefulStreaming[S, O: Encoder](a: TurnAutomaton[S, O],
-      watermarkDelay: String, idleGapMs: Long): Flow[Turn, O] =
-    new Flow(ds => AutomatonRunner.runStreaming(ds, a, watermarkDelay, idleGapMs))
-
   /** KeyBasedEdgeRouter (`edge_router.py:102-154`): hash-route by key so all
     * events of one key land in one partition. Spark's groupByKey does this
     * implicitly; the explicit stage exists for co-locating a chain of keyed

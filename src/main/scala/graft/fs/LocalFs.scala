@@ -8,7 +8,7 @@ import java.nio.file.attribute.PosixFilePermission
 import scala.jdk.CollectionConverters._
 
 import org.apache.hadoop.conf.Configuration
-import org.apache.hadoop.fs.{ChecksumFs, DelegateToFileSystem, FileStatus, FsConstants, FsServerDefaults, Path, RawLocalFileSystem}
+import org.apache.hadoop.fs.{ChecksumFs, DelegateToFileSystem, FileStatus, FileSystem, FsConstants, FsServerDefaults, Path, RawLocalFileSystem}
 import org.apache.hadoop.fs.local.LocalConfigKeys
 import org.apache.hadoop.fs.permission.FsPermission
 import org.apache.spark.sql.SparkSession
@@ -104,11 +104,40 @@ object LocalFs {
     else Map(FsImplKey -> classOf[LocalFileSystem].getName,
       s"$FsImplKey.disable.cache" -> "true")
 
+  /** Spark's file-listing threshold: an `InMemoryFileIndex` over more
+    * paths than this lists them in a Spark job, one task per path. */
+  val ListingThresholdKey = "spark.sql.sources.parallelPartitionDiscovery.threshold"
+
+  /** Lists every micro-batch of a file stream over `dir` on the driver
+    * when `dir` is on the local filesystem: sets [[ListingThresholdKey]] to
+    * `Int.MaxValue` in `spark`'s session conf, unless it is already set
+    * there. `FileStreamSource.getBatch` hands a batch's files, which its
+    * `latestOffset` listed moments before, to an `InMemoryFileIndex`; above
+    * the stock threshold of 32 files that index stats them again in a job
+    * whose every task deserializes the ~1,100-key Hadoop conf (~12 ms),
+    * while a local stat costs microseconds. On HDFS or an object store one
+    * job can beat N serial remote stats, so other schemes keep Spark's
+    * parallel listing. The setting is session-wide: later batch reads in
+    * the same session list on the driver too. */
+  def installDriverListing(spark: SparkSession, dir: String): Unit =
+    if (isLocal(dir, defaultFs(spark)) && !userSet(spark, ListingThresholdKey))
+      spark.conf.set(ListingThresholdKey, Int.MaxValue.toString)
+
+  /** `dir`'s filesystem is the local one: its scheme, or `defaultFs`'s
+    * when it has none, is `file`. Parses only; no filesystem is touched. */
+  def isLocal(dir: String, defaultFs: URI): Boolean =
+    Option(new Path(dir).toUri.getScheme).getOrElse(defaultFs.getScheme) == "file"
+
+  // the session conf's fs.defaultFS reaches every job's Hadoop conf
+  private def defaultFs(spark: SparkSession): URI =
+    spark.conf.getOption(FileSystem.FS_DEFAULT_NAME_KEY).map(URI.create)
+      .getOrElse(FileSystem.getDefaultUri(spark.sparkContext.hadoopConfiguration))
+
   /** Set in the session conf, or to a value in the Hadoop conf by anything
     * but Hadoop's defaults (an unset key keeps its recorded source). */
   private def userSet(spark: SparkSession, key: String): Boolean = {
     val hc = spark.sparkContext.hadoopConfiguration
-    spark.conf.getOption(key).isDefined || (hc.get(key) != null &&
+    spark.conf.getAll.contains(key) || (hc.get(key) != null &&
       Option(hc.getPropertySources(key)).exists(_.exists(_ != "core-default.xml")))
   }
 }

@@ -99,10 +99,6 @@ object TextFunctions {
   def stopwordCountOf(toks: Column, stops: Seq[String]): Column =
     size(filter(toks, t => t.isin(stops.map(s => s: Any): _*)))
 
-  /** Stopword-count over tokens (codegen'd higher-order filter). */
-  def stopwordCount(text: Column, stops: Seq[String]): Column =
-    stopwordCountOf(tokens(text), stops)
-
   val EnStops = Seq("the", "a", "of", "and")
   val DeStops = Seq("der", "die", "das", "und")
   val FrStops = Seq("le", "la", "les", "et")

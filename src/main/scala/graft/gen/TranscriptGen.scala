@@ -121,8 +121,4 @@ object TranscriptGen {
     import spark.implicits._
     spark.range(0L, cfg.nConvs).flatMap(i => turnsFor(i, cfg))
   }
-
-  /** Write as the engine's transcripts table (see sources.TranscriptTable). */
-  def writeTable(spark: SparkSession, cfg: Config, dir: String, buckets: Int = 32): Unit =
-    graft.sources.TranscriptTable.write(dataset(spark, cfg), dir, buckets)
 }

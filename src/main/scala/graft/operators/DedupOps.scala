@@ -171,15 +171,6 @@ object DedupOps {
       .select(col("doc_a"), col("doc_b"), jac.as("jaccard"))
   }
 
-  /** Near-dup pairs: LSH candidates verified by exact Jaccard >= threshold.
-    * The two-phase shape (cheap candidate gen, expensive verify on the
-    * small candidate set) is the part that survives 100x scale-up. */
-  def nearDupPairs(docs: DataFrame, threshold: Double = 0.7, shingleN: Int = 3,
-                   maxBucket: Int = MaxBucket,
-                   obs: Option[Observation] = None): DataFrame =
-    ngramJaccard(docs, minhashLshPairs(docs, shingleN, maxBucket, obs), shingleN)
-      .filter(col("jaccard") >= threshold)
-
   /** End-to-end corpus dedup, the composed user-facing pipeline: EXACT
     * first (identical texts collapse to their min-doc_id canonical — which
     * is also what defuses LSH's degenerate identical-signature buckets),
@@ -247,10 +238,4 @@ object DedupOps {
     Spread(docs).filter(col("text").isNotNull)
       .select(col("doc_id"), sig.as("simhash"))
   }
-
-  /** SimHash dedup groups: docs with identical signatures. */
-  def simhashGroups(docs: DataFrame): DataFrame =
-    simhash(docs).groupBy("simhash")
-      .agg(min("doc_id").as("canonical_doc_id"), count(lit(1)).as("n_docs"))
-      .filter(col("n_docs") > 1)
 }

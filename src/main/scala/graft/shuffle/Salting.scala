@@ -51,15 +51,4 @@ object Salting {
         max(col("max_idx")).as("max_idx"))
     ).withColumnRenamed("__key", "conv_id")
 
-  /** Broadcast-salt pattern for skewed JOINS: replicate the small side
-    * nSalts times, salt the big side, join on (key, salt). With AQE's
-    * skew-join handling on, prefer the built-in; this is the explicit form
-    * for engines/configs where AQE is off. */
-  def saltedJoinKeys(big: DataFrame, keyCol: String, salt: Column,
-                     nSalts: Int): DataFrame =
-    big.withColumn("__salt", saltCol(salt, nSalts))
-
-  def replicateForSalt(small: DataFrame, nSalts: Int): DataFrame =
-    small.crossJoin(small.sparkSession.range(nSalts).toDF("__salt"))
-
 }

@@ -2,7 +2,7 @@ package graft.sources
 
 import scala.jdk.CollectionConverters._
 
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.{Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.model.Turn
@@ -107,18 +107,22 @@ object TranscriptTable {
     * plays the role of the reference's adaptive batch sizing / bounded queues
     * (`/root/reference/src/reflow/internal/worker.py:108-132`,
     * `flow_engine.py:18`): it bounds per-micro-batch intake so state and
-    * shuffle stay memory-resident at any scale. */
+    * shuffle stay memory-resident at any scale.
+    *
+    * Installs, each set-if-absent, the in-process `file:` checkpoint
+    * filesystem (`LocalFs.install`) and, when `dir` is local, driver-side
+    * listing of every micro-batch's files (`LocalFs.installDriverListing`),
+    * so a bulk batch of more than 32 files runs no listing job of one task
+    * per file. Offsets, the source log and the checkpoint layout do not
+    * depend on either. */
   def readStream(spark: SparkSession, dir: String,
                  maxFilesPerTrigger: Option[Int] = None): Dataset[Turn] = {
     import spark.implicits._
     graft.fs.LocalFs.install(spark)
+    graft.fs.LocalFs.installDriverListing(spark, dir)
     val r = spark.readStream.schema(readSchema)
     val r2 = maxFilesPerTrigger.fold(r)(n => r.option("maxFilesPerTrigger", n))
     r2.parquet(dir)
       .select("conv_id", "turn_idx", "role", "text", "tool", "ts").as[Turn]
   }
-
-  /** Batch DataFrame view (for SQL/relational paths). */
-  def readDF(spark: SparkSession, dir: String): DataFrame =
-    read(spark)(dir).toDF()
 }
