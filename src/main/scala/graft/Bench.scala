@@ -1,10 +1,13 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.Dataset
+import org.apache.spark.sql.streaming.Trigger
 
 import graft.flow.{FlowSink, FlowSource}
 import graft.gen.TranscriptGen
 import graft.metrics.ProgressMetrics
+import graft.model.LabeledTurn
+import graft.sink.ExactlyOnceParquetSink
 import graft.sources.TranscriptTable
 import graft.state.{AutomatonRunner, Handlers}
 
@@ -45,118 +48,15 @@ object Bench {
   // (round-3 judge stretch ask); the recall leg still computes them
   // untimed as the accuracy reference.
 
-  /** Bench scratch space: RAM-backed when available. On a real cluster the
-    * state checkpoints / shuffle land on local NVMe + HDFS. fsync on a
-    * local ext4 /tmp is not a bottleneck for the CEP trigger (a traced run
-    * moved trigger p50 by ~6% between ext4 and /dev/shm); per-file process
-    * forks in Hadoop's local filesystem were, see `graft.fs.LocalFs`. */
-  private def scratchBase: String =
-    if (java.nio.file.Files.isDirectory(java.nio.file.Paths.get("/dev/shm")))
-      "/dev/shm" else System.getProperty("java.io.tmpdir")
-
-  /** @param shufflePartitions the JOB's partitioning. The scaling pair
-    *   passes a constant for BOTH levels: shuffle/state partitioning is a
-    *   property of the job, not the cluster — a production job keeps it
-    *   fixed while executors are added, and letting it track the core
-    *   count would hand the low level a different (cheaper) plan and
-    *   overstate its throughput. */
-  private def session(cpus: Int, localDir: String,
-      shufflePartitions: Int, executorProcs: Boolean = false,
-      streaming: Boolean = false): SparkSession = {
-    SparkSession.clearActiveSession()
-    SparkSession.clearDefaultSession()
-    // executorProcs = the faithful "N executors" form: local-cluster mode
-    // launches N SEPARATE single-core executor JVMs (own heap/GC/memory
-    // manager, netty shuffle between processes) — the same process
-    // topology a standalone/YARN cluster gives one multi-core box, vs
-    // local[n]'s N task threads inside one JVM. Executors need this JVM's
-    // classpath (graft classes live in sbt's classes dir, not a jar).
-    // per-executor heap in MB for local-cluster mode (round-3 finding:
-    // 2.5 GB single-core executors collapse under sf0.1 trigger sizes)
-    val execMem = sys.env.getOrElse("SPARK_GRAFT_EXECUTOR_MEM", "4096")
-    val b0 = SparkSession.builder()
-      .master(if (executorProcs) s"local-cluster[$cpus,1,$execMem]"
-              else s"local[$cpus]")
-      .appName(s"graft-bench-$cpus")
-    val b = if (executorProcs)
-      b0.config("spark.executor.extraClassPath",
-          System.getProperty("java.class.path"))
-        .config("spark.executor.memory", s"${execMem}m")
-        // Do not let the first micro-batch race executor registration: if
-        // batch 0 schedules while only 1-2 executors are up, every state
-        // partition loads THERE and state-store locality pins all later
-        // stateful tasks to those executors — measured on this box as 2 of
-        // 8 executors doing 5x the tasks while 6 idle (c8 ~59k turns/s vs
-        // c2 ~290k). A real spark-submit job does the same thing with
-        // these two settings.
-        .config("spark.scheduler.minRegisteredResourcesRatio", "1.0")
-        .config("spark.scheduler.maxRegisteredResourcesWaitingTime", "60s")
-        // The first trigger's scan is a handful of map tasks (few files x
-        // maxPartitionBytes), so its shuffle output is concentrated on 1-2
-        // executors; reduce-side shuffle locality then prefers exactly
-        // those executors for the 32 state partitions, and state-store
-        // locality pins them there for the rest of the stream. Disabling
-        // shuffle reduce locality lets batch 0 spread the state evenly;
-        // the state-store coordinator's own locality (the one that
-        // matters) still applies from batch 1 on. Standard practice for
-        // stateful streaming jobs on real clusters.
-        .config("spark.shuffle.reduceLocality.enabled", "false")
-        // Each executor JVM sees the HOST's 32 CPUs and sizes its G1/JIT
-        // thread pools for all of them (~23 GC threads per executor); 8
-        // such JVMs GC-storming one box made every task cost ~20x the
-        // core-seconds of the 2-executor leg. A real cluster's cgroup CPU
-        // limit gives the JVM the executor's core count — replicate that.
-        .config("spark.executor.extraJavaOptions",
-          "-XX:ActiveProcessorCount=4")
-        // the executor launcher resolves the Scala dir from this env var
-        // (the spark-submit shell scripts export it; a bare JVM must pass
-        // it through the executor command environment instead)
-        .config("spark.executorEnv.SPARK_SCALA_VERSION", "2.13")
-    else b0
-    // Streaming-job scan sizing, FIXED across scaling levels: the
-    // time-sliced input files are ~15 MB each, so the default 128 MB
-    // maxPartitionBytes packs a 16-file trigger's scan into ~3 map tasks —
-    // the scan+shuffle-write phase of every bulk trigger then runs at
-    // parallelism 3 regardless of core count, idling 5 of 8 cores at the
-    // high level and reading as false scaling loss. 16 MB ≈ one task per
-    // input file. (A production job sizes this to its file layout the
-    // same way; leaving it default underschedules ANY level above ~3
-    // cores.)
-    val b1 = if (streaming)
-      b.config("spark.sql.files.maxPartitionBytes", "16m")
-        .config("spark.sql.files.openCostInBytes", "1m")
-    else b
-    val s = b1
-      .config("spark.sql.shuffle.partitions", shufflePartitions.toString)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.local.dir", localDir)
-      .config("spark.sql.adaptive.enabled", "true")
-      // state-store snapshot maintenance contends with task threads on the
-      // same providers; for a finite bench run deltas are few — defer it
-      .config("spark.sql.streaming.stateStore.maintenanceInterval", "3600s")
-      // SPARK_GRAFT_STATE=rocksdb benches the RocksDB provider (the scale
-      // path when per-executor state exceeds heap); default HDFS-backed
-      .config("spark.sql.streaming.stateStore.providerClass",
-        if (sys.env.get("SPARK_GRAFT_STATE").contains("rocksdb"))
-          "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider"
-        else
-          "org.apache.spark.sql.execution.streaming.state.HDFSBackedStateStoreProvider")
-      // HDFS-backed (in-memory + snapshot) state store: right provider for
-      // state that fits executor memory; RocksDB (proven in the test suite)
-      // is for when per-executor state exceeds heap — at this bench size its
-      // per-instance open/commit cost dominates instead.
-      .getOrCreate()
-    s.sparkContext.setLogLevel("WARN")
-    s
-  }
-
   private def timeSec[A](f: => A): Double = {
     val t0 = System.nanoTime(); f; (System.nanoTime() - t0) / 1e9
   }
 
   /** ONE full streaming run over the pre-generated input at `cpus` cores,
-    * in a fresh session (torn down after). The scaling leg calls this in
+    * in a fresh streaming-preset session (torn down after): fMGWS on the
+    * HDFS-backed store, the job the north-star metric names. The warm
+    * drain goes through `FlowSink.runAvailableNow`; the timed drain starts
+    * its clock immediately before `start()`. The scaling leg calls this in
     * interleaved (lo, hi, lo, hi, ...) pass pairs — see main.
     *
     * Before the timed stream, the SAME pipeline runs once over a small
@@ -169,55 +69,30 @@ object Bench {
     * JVM, so its warmup pass is cheap and harmless. */
   private def streamOnePass(inDir: String, warmDir: String, workBase: String,
       cpus: Int, tag: String, procs: Boolean): (ProgressMetrics.Summary, Double) = {
-    // fixed job partitioning across levels (see session); 32 = the
-    // repo-wide production default, overridable for experiments
-    val parts = sys.env.getOrElse("SPARK_GRAFT_STREAM_PARTS", "32").toInt
-    val spark = session(cpus, s"$workBase/spark_local_${tag}_c$cpus", parts, procs,
-      streaming = true)
+    val spark = Sessions.streaming(cpus, s"$workBase/spark_local_${tag}_c$cpus", procs)
     try {
       import spark.implicits._
-      implicit val enc = implicitly[org.apache.spark.sql.Encoder[graft.model.LabeledTurn]]
       val maxFiles = Some(sys.env.getOrElse("SPARK_GRAFT_MAX_FILES", "16").toInt)
-      // SPARK_GRAFT_RUNNER=tws benches the transformWithState runtime
-      // (requires SPARK_GRAFT_STATE=rocksdb); default flatMapGroupsWithState
-      val useTws = sys.env.get("SPARK_GRAFT_RUNNER").contains("tws")
+      def job(dir: String) = AutomatonRunner.runStreaming(
+        FlowSource.stream(spark, dir, maxFiles), Handlers.ChangeDetector,
+        watermarkDelay = "90 minutes")
 
       // warmup pass (untimed): same source->watermark->automaton->sink
       // pipeline over the small warmup input, so scan/shuffle/state/kryo/
       // sink code paths are JIT-compiled on every executor before the clock
       // starts (fresh JVMs per pass in executor-process mode)
-      {
-        val wSink = new graft.sink.ExactlyOnceParquetSink(s"$workBase/warm_out_${tag}_c$cpus")
-        val wStream = FlowSource.stream(spark, warmDir, maxFiles)
-        val w =
-          (if (useTws) AutomatonRunner.runStreamingTws(wStream,
-            Handlers.ChangeDetector, watermarkDelay = "90 minutes")
-          else AutomatonRunner.runStreaming(wStream,
-            Handlers.ChangeDetector, watermarkDelay = "90 minutes"))
-          .writeStream
-          .outputMode("append")
-          .option("checkpointLocation", s"$workBase/warm_ck_${tag}_c$cpus")
-          .foreachBatch((df: org.apache.spark.sql.Dataset[graft.model.LabeledTurn],
-                         epochId: Long) => wSink.addBatch(df.toDF(), epochId))
-          .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-          .start()
-        w.awaitTermination()
-      }
+      FlowSink.runAvailableNow(job(warmDir), s"$workBase/warm_out_${tag}_c$cpus",
+        s"$workBase/warm_ck_${tag}_c$cpus")
 
-      val sink = new graft.sink.ExactlyOnceParquetSink(s"$workBase/out_${tag}_c$cpus")
-      val stream = FlowSource.stream(spark, inDir, maxFiles)
-      val result =
-        if (useTws) AutomatonRunner.runStreamingTws(stream,
-          Handlers.ChangeDetector, watermarkDelay = "90 minutes")
-        else AutomatonRunner.runStreaming(stream,
-          Handlers.ChangeDetector, watermarkDelay = "90 minutes")
+      val sink = new ExactlyOnceParquetSink(s"$workBase/out_${tag}_c$cpus")
+      val result = job(inDir)
       val t0 = System.nanoTime()
       val q = result.writeStream
         .outputMode("append")
         .option("checkpointLocation", s"$workBase/ck_${tag}_c$cpus")
-        .foreachBatch((df: org.apache.spark.sql.Dataset[graft.model.LabeledTurn],
-                       epochId: Long) => sink.addBatch(df.toDF(), epochId))
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
+        .foreachBatch((df: Dataset[LabeledTurn], epochId: Long) =>
+          sink.addBatch(df.toDF(), epochId))
+        .trigger(Trigger.AvailableNow())
         .start()
       q.awaitTermination()
       val wall = (System.nanoTime() - t0) / 1e9
@@ -297,15 +172,15 @@ object Bench {
     else (s(s.length / 2 - 1) + s(s.length / 2)) / 2
   }
 
-  def main(args: Array[String]): Unit = {
+  def main(args: Array[String]): Unit = graft.fs.Dirs.withScratch("graft_bench")(run)
+
+  private def run(work: String): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt
     val skipScaling = sys.env.get("SPARK_GRAFT_SKIP_SCALING").contains("1")
 
     // ---- leg 1: batch headline operators ------------------------------
-    val work = java.nio.file.Files.createTempDirectory(
-      java.nio.file.Paths.get(scratchBase), "graft_bench").toString
-    val spark0 = session(cpus, s"$work/spark_local", cpus)
+    val spark0 = Sessions.batch(cpus, s"$work/spark_local")
     val qmap = SparkEntry.queries
     val skipBatch = sys.env.get("SPARK_GRAFT_SKIP_BATCH").contains("1")
     // warm up codegen/IO paths so the first timed query isn't charged for
@@ -573,17 +448,14 @@ object Bench {
     // the spin-probe retry bar applies in EVERY config (the probe is
     // job-independent): a pair whose post-leg probe exceeds this ran
     // on a degraded host. Quiet reference 2.2-2.6 s on this box.
-    val spinMax = sys.env.getOrElse("SPARK_GRAFT_SPIN_MAX_MS", "3600").toDouble
-    val pairRetries = sys.env.getOrElse("SPARK_GRAFT_PAIR_RETRIES", "2").toInt
+    val spinMax = 3600.0
+    val pairRetries = 2
     // shared by the quiet-band defaults of both scaling legs: they apply
     // only to the default job shape on the default sf0.1 input (exact
     // basename match — a custom path that merely ENDS in "0.1" is
     // different data with a different throughput band and must not
     // inherit the bar)
-    val defaultJobShape = !sys.env.contains("SPARK_GRAFT_RUNNER") &&
-      !sys.env.contains("SPARK_GRAFT_STATE") &&
-      !sys.env.contains("SPARK_GRAFT_STREAM_CONVS") &&
-      !sys.env.contains("SPARK_GRAFT_STREAM_PARTS") &&
+    val defaultJobShape = !sys.env.contains("SPARK_GRAFT_STREAM_CONVS") &&
       !sys.env.contains("SPARK_GRAFT_MAX_FILES") &&
       new java.io.File(sfDir.stripSuffix("/")).getName == "sf0.1"
 
@@ -722,17 +594,15 @@ object Bench {
         // absolute throughput lands far below the documented quiet band
         // is re-run (bounded retries) and the recorded artifact carries
         // the band, the verdict, and the retries used — a storm can no
-        // longer silently write a 0.55 into the artifact. The default
-        // band applies only to the default configuration (thread-mode
-        // fMGWS/HDFS, levels 2,8, sf0.1 input); any knob change disables
-        // it unless SPARK_GRAFT_QUIET_MIN_LO sets an explicit bar.
+        // longer silently write a 0.55 into the artifact. The band
+        // applies only to the default configuration (thread mode, levels
+        // 2,8, sf0.1 input); any knob change disables it.
         val defaultCfg = defaultJobShape &&
           !sys.env.contains("SPARK_GRAFT_EXECUTORS") && levels == Seq(2, 8)
-        val quietMin = sys.env.get("SPARK_GRAFT_QUIET_MIN_LO").map(_.toDouble)
-          .getOrElse(if (defaultCfg) 400000.0 else 0.0)
+        val quietMin = if (defaultCfg) 400000.0 else 0.0
         if (quietMin <= 0)
           System.err.println("[bench] quiet-host throughput band DISABLED " +
-            "(non-default config and no SPARK_GRAFT_QUIET_MIN_LO)")
+            "(non-default config)")
         scalingLeg(levels, sys.env.get("SPARK_GRAFT_EXECUTORS").contains("1"),
           nPasses, quietMin, "")
       }
@@ -740,30 +610,23 @@ object Bench {
     // ---- leg 3: executor-JVM 1→4 pair (the north rule's literal shape) --
     // N real single-core executor JVMs → 4N (own heaps, GC, netty shuffle
     // between processes — local-cluster mode with the cluster-practice
-    // session configs; see `session`). Runs by DEFAULT so the strongest
+    // session configs; see `Sessions.streamingConf`). Runs by DEFAULT so the strongest
     // faithful-topology evidence lands in the driver-visible artifact
     // itself (round-4 judge ask #1); BASELINE.md round 4 measured 0.72
     // steady for this pair on a quiet host. 1→4 rather than 2→8: the
     // 8-JVM leg amplifies partial hypervisor steal ~10× on this box
     // (BASELINE.md round-4 matrix), so it cannot produce a stable
-    // artifact here. SPARK_GRAFT_SKIP_EXEC=1 skips;
-    // SPARK_GRAFT_EXEC_LEVELS / _EXEC_PASSES / _QUIET_MIN_LO_EXEC tune.
+    // artifact here.
     val execStream =
-      if (skipScaling || sys.env.get("SPARK_GRAFT_SKIP_EXEC").contains("1") ||
+      if (skipScaling ||
           // EXECUTORS=1 already ran the MAIN pair in executor mode
           sys.env.get("SPARK_GRAFT_EXECUTORS").contains("1"))
         Map.empty[String, Double]
       else {
-        val execLevels = sys.env.getOrElse("SPARK_GRAFT_EXEC_LEVELS", "1,4")
-          .split(",").map(_.trim.toInt).toSeq
-        val execPasses = sys.env.getOrElse("SPARK_GRAFT_EXEC_PASSES", "2").toInt
         // quiet band for the single-executor lo leg (r4 clean-host
         // reference: 222k steady on the full sf0.1 stream)
-        val quietMinExec = sys.env.get("SPARK_GRAFT_QUIET_MIN_LO_EXEC")
-          .map(_.toDouble)
-          .getOrElse(if (defaultJobShape && execLevels == Seq(1, 4)) 180000.0
-                     else 0.0)
-        scalingLeg(execLevels, procs = true, execPasses, quietMinExec, "exec_")
+        val quietMinExec = if (defaultJobShape) 180000.0 else 0.0
+        scalingLeg(Seq(1, 4), procs = true, legPasses = 2, quietMinExec, "exec_")
       }
 
     val allStream = stream ++ execStream
@@ -811,15 +674,5 @@ object Bench {
       skew.get("dedup_spiked_sec").map(v => "\"dedup_spiked_sec\":" + num(v)))
       .mkString("{", ",", "}")
     println(s"""{"metric":"total","value":$total,"unit":"sec","summary":$sm,"sf":"$sfDir"}""")
-
-    // reclaim the RAM-disk scratch
-    def rmTree(p: java.nio.file.Path): Unit = {
-      if (java.nio.file.Files.isDirectory(p)) {
-        val s = java.nio.file.Files.list(p)
-        try s.iterator().forEachRemaining(rmTree) finally s.close()
-      }
-      java.nio.file.Files.deleteIfExists(p)
-    }
-    rmTree(java.nio.file.Paths.get(work))
   }
 }

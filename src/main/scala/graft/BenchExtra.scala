@@ -6,9 +6,9 @@ import org.apache.spark.sql.SparkSession
 
 /** Optimization-round measurement harness (guide §1.4): per-query
   * noop-sink timing OUTSIDE the frozen driver bench, with optional
-  * formatted-plan capture. Session config mirrors Bench's batch leg
-  * (local[$SPARK_GRAFT_CPUS], shuffle partitions = cpus, AQE on, UTC,
-  * /dev/shm scratch) so numbers here are comparable to the driver's.
+  * formatted-plan capture. Runs on Bench's batch-leg session
+  * (`Sessions.batch` at local[$SPARK_GRAFT_CPUS], /dev/shm scratch) so
+  * numbers here are comparable to the driver's.
   *
   *   sbt "runMain graft.BenchExtra [-explain <outDir>] [-passes N] <name>…"
   *
@@ -21,9 +21,6 @@ import org.apache.spark.sql.SparkSession
   * SPARK_GRAFT_VERIFY_ONLY subset loop for correctness.
   */
 object BenchExtra {
-  private def scratchBase: String =
-    if (java.nio.file.Files.isDirectory(java.nio.file.Paths.get("/dev/shm")))
-      "/dev/shm" else System.getProperty("java.io.tmpdir")
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
@@ -43,19 +40,16 @@ object BenchExtra {
     val qmap = SparkEntry.queries
     val names = if (names0.nonEmpty) names0 else qmap.keys.toSeq.sorted
 
-    val work = java.nio.file.Files.createTempDirectory(
-      java.nio.file.Paths.get(scratchBase), "graft_bx").toString
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .appName("graft-bench-extra")
-      .config("spark.sql.shuffle.partitions", cpus.toString)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.local.dir", s"$work/spark_local")
-      .config("spark.sql.adaptive.enabled", "true")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    graft.fs.Dirs.withScratch("graft_bx") { work =>
+      val spark = Sessions.batch(cpus, s"$work/spark_local")
+      try timeAll(spark, sfDir, names, passes, explainDir)
+      finally spark.stop()
+    }
+  }
 
+  private def timeAll(spark: SparkSession, sfDir: String,
+      names: Seq[String], passes: Int, explainDir: Option[String]): Unit = {
+    val qmap = SparkEntry.queries
     // warm codegen/IO like Bench does
     try qmap("q01_agg_pricing")(spark, sfDir).write.format("noop")
       .mode("overwrite").save()
@@ -88,14 +82,5 @@ object BenchExtra {
         println(s"[bx] $name FAILED: ${e.getMessage}")
       }
     }
-    spark.stop()
-    def rmTree(p: java.nio.file.Path): Unit = {
-      if (java.nio.file.Files.isDirectory(p)) {
-        val s = java.nio.file.Files.list(p)
-        try s.iterator().forEachRemaining(rmTree) finally s.close()
-      }
-      java.nio.file.Files.deleteIfExists(p)
-    }
-    rmTree(java.nio.file.Paths.get(work))
   }
 }

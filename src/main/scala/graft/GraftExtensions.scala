@@ -8,7 +8,7 @@ import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
   * pieces on ANY session without code changes —
   *
   *   spark-submit --conf spark.sql.extensions=graft.GraftExtensions ...
-  *   // or: SparkSession.builder().withExtensions(new GraftExtensions) ...
+  *   // or: withExtensions(new GraftExtensions) on a session builder
   *
   * Injected:
   *  - `ConversationFoldStrategy` (plans the custom ConversationFoldPlan

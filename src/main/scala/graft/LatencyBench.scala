@@ -22,33 +22,27 @@ import graft.state.{AutomatonRunner, Handlers}
   * watermark -> keyed ordered automaton -> sink) runs on a short
   * ProcessingTime trigger. Event-to-emit latency per row = emit wall time
   * minus the row's `ts` (== its append time); p50/p99 over all emitted
-  * rows in steady state.
+  * rows in steady state. The job runs on the streaming preset
+  * (`Sessions.streaming`: 32 shuffle/state partitions, 16m scan split),
+  * the same job Bench's scaling legs and perfbench measure.
   */
 object LatencyBench {
 
+  private val Ticks = 30
+  private val ConvsPerTick = 400
+
   def main(args: Array[String]): Unit = {
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8").toInt
-    val ticks = sys.env.getOrElse("SPARK_GRAFT_LAT_TICKS", "30").toInt
-    val convsPerTick = sys.env.getOrElse("SPARK_GRAFT_LAT_CONVS", "400").toInt
-    val base =
-      if (java.nio.file.Files.isDirectory(java.nio.file.Paths.get("/dev/shm")))
-        "/dev/shm" else System.getProperty("java.io.tmpdir")
-    val work = java.nio.file.Files.createTempDirectory(
-      java.nio.file.Paths.get(base), "graft_lat").toString
-    val in = s"$work/in"; java.nio.file.Files.createDirectories(java.nio.file.Paths.get(in))
+    graft.fs.Dirs.withScratch("graft_lat") { work =>
+      val spark = Sessions.streaming(cpus, s"$work/spark_local")
+      try run(spark, work, cpus) finally spark.stop()
+    }
+  }
 
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .appName("graft-latency")
-      .config("spark.sql.shuffle.partitions", cpus.toString)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.local.dir", s"$work/spark_local")
-      .config("spark.sql.streaming.stateStore.maintenanceInterval", "3600s")
-      .getOrCreate()
+  private def run(spark: SparkSession, work: String, cpus: Int): Unit = {
     spark.sparkContext.setLogLevel("ERROR")
     import spark.implicits._
-    implicit val enc = implicitly[org.apache.spark.sql.Encoder[graft.model.LabeledTurn]]
+    val in = s"$work/in"; java.nio.file.Files.createDirectories(java.nio.file.Paths.get(in))
 
     // emitted-row latencies (ms), collected per micro-batch on the driver
     val latencies = ArrayBuffer.empty[Long]
@@ -76,10 +70,10 @@ object LatencyBench {
     val ticksPerConv = 3
     val perTick = turnsPerConv / ticksPerConv
     var tick = 0
-    while (tick < ticks) {
+    while (tick < Ticks) {
       val now = System.currentTimeMillis()
-      val rows = (0 until convsPerTick).flatMap { c =>
-        val convNum = (tick / ticksPerConv) * convsPerTick + c
+      val rows = (0 until ConvsPerTick).flatMap { c =>
+        val convNum = (tick / ticksPerConv) * ConvsPerTick + c
         val phase = tick % ticksPerConv
         (0 until perTick).map { i =>
           val idx = phase * perTick + i
@@ -110,15 +104,5 @@ object LatencyBench {
       s""""p50":${pct(lats, 0.5)},"p90":${pct(lats, 0.9)},"p99":${pct(lats, 0.99)},""" +
       s""""steady_p50":${pct(steady, 0.5)},"steady_p99":${pct(steady, 0.99)},""" +
       s""""max":${if (lats.isEmpty) -1 else lats.last},"cpus":$cpus}""")
-
-    def rmTree(p: java.nio.file.Path): Unit = {
-      if (java.nio.file.Files.isDirectory(p)) {
-        val s = java.nio.file.Files.list(p)
-        try s.iterator().forEachRemaining(rmTree) finally s.close()
-      }
-      java.nio.file.Files.deleteIfExists(p)
-    }
-    spark.stop()
-    rmTree(java.nio.file.Paths.get(work))
   }
 }

@@ -20,20 +20,15 @@ object Verify {
 
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir) = args
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      // the deployment-grade registration path: the custom Catalyst pieces
-      // (ConversationFoldStrategy, parse_temp) arrive via spark.sql.extensions
-      // exactly as on a production spark-submit, so t51 is gate-verified
-      // through the extension-injected strategy (ConversationFold.run
-      // self-registers only when the extension is absent)
-      .config("spark.sql.extensions", classOf[GraftExtensions].getName)
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4").toInt
+    // Spark's scratch goes to a temp dir, never under outDir (the dump)
+    graft.fs.Dirs.withScratch("graft_verify") { work =>
+      val spark = Sessions.batch(cpus, s"$work/spark_local")
+      try dump(spark, sfDir, outDir) finally spark.stop()
+    }
+  }
+
+  private def dump(spark: SparkSession, sfDir: String, outDir: String): Unit = {
     new java.io.File(outDir).mkdirs()
 
     def ntzNormalized(df: org.apache.spark.sql.DataFrame): org.apache.spark.sql.DataFrame =
@@ -121,6 +116,5 @@ object Verify {
         s"${q(k)}: ${q(v.replace(TranscriptsToken, transcriptsRef))}"
       }.mkString("{", ",", "}")
     Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
-    spark.stop()
   }
 }

@@ -7,7 +7,7 @@ import scala.jdk.CollectionConverters._
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
-import graft.fs.LocalFs
+import graft.fs.{Dirs, LocalFs}
 
 /** Exactly-once table sink without an Iceberg runtime (SURVEY.md §7.3).
   *
@@ -155,17 +155,10 @@ class ExactlyOnceParquetSink(val dir: String) extends Serializable {
     Files.move(tmp, compactedMarker, StandardCopyOption.ATOMIC_MOVE,
       StandardCopyOption.REPLACE_EXISTING)
     // step 3: best-effort cleanup of everything the generation covers
-    def rmTree(p: Path): Unit = {
-      if (Files.isDirectory(p)) {
-        val s = Files.list(p)
-        try s.iterator().asScala.foreach(rmTree) finally s.close()
-      }
-      Files.deleteIfExists(p); ()
-    }
     tail.foreach { e =>
-      rmTree(Paths.get(epochDir(e)))
+      Dirs.rmTree(Paths.get(epochDir(e)))
       Files.deleteIfExists(marker(e))
     }
-    upTo0.foreach(g => rmTree(Paths.get(genDir(g))))
+    upTo0.foreach(g => Dirs.rmTree(Paths.get(genDir(g))))
   }
 }

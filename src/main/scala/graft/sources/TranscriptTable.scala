@@ -7,59 +7,39 @@ import org.apache.spark.sql.functions._
 
 import graft.model.Turn
 
-/** The engine's transcripts table: an Iceberg-STYLE table realized as
-  * bucketed Parquet (no Iceberg runtime jar ships in this sandbox —
-  * SURVEY.md §7.0). The layout is what matters at 10^12-turn scale:
+/** The engine's transcripts table: Parquet files in a time-sliced layout
+  * (`writeTimeSliced`), read as a batch table (`read`) or a file stream
+  * (`readStream`). An Iceberg-STYLE table without the Iceberg runtime jar
+  * (SURVEY.md §7.0):
   *
-  *  - rows are hash-bucketed by `conv_id` into `bucket=K/` directories.
-  *    All turns of one conversation live in one bucket, so (a) a keyed
-  *    stateful job can process bucket subsets independently, (b) a
-  *    point-lookup of one conversation prunes to 1/N of the files via
-  *    partition pruning on the `bucket` column, and (c) the streaming
-  *    source's per-file micro-batches never split a conversation across
-  *    arbitrary many files.
+  *  - files land in event-time order, one append per time slice, the way a
+  *    live table grows, so a watermarking stream over them never
+  *    late-drops in-order data;
+  *  - within a slice, rows are hash-split by `conv_id` into
+  *    `filesPerSlice` files, which bounds the file count (micro-batch
+  *    admission is per file) and keeps each conversation's turns of one
+  *    slice in one file;
   *  - columnar Parquet at rest gives predicate pushdown + column pruning
   *    for the batch/verify paths; row-typed `Dataset[Turn]` in flight.
   *
   * Swapping in a real Iceberg catalog where the jar exists only changes
-  * `write`/`read` bodies; every operator is written against the returned
+  * these bodies; every operator is written against the returned
   * `Dataset[Turn]`.
   */
 object TranscriptTable {
 
-  val BucketCol = "bucket"
-
-  def bucketOf(nBuckets: Int) = pmod(xxhash64(col("conv_id")), lit(nBuckets))
-
-  def write(ds: Dataset[Turn], dir: String, nBuckets: Int = 32): Unit = {
-    ds.withColumn(BucketCol, bucketOf(nBuckets))
-      // one file per bucket partition per task batch; repartition by the
-      // bucket column so each output file holds whole conversations
-      .repartition(col(BucketCol))
-      .write
-      .mode("overwrite")
-      .partitionBy(BucketCol)
-      .parquet(dir)
-  }
-
   def read(spark: SparkSession): String => Dataset[Turn] = dir => {
     import spark.implicits._
-    spark.read.schema(readSchema).parquet(dir)
-      .select("conv_id", "turn_idx", "role", "text", "tool", "ts").as[Turn]
+    spark.read.schema(Turn.schema).parquet(dir).as[Turn]
   }
 
-  private def readSchema =
-    Turn.schema.add(org.apache.spark.sql.types.StructField(
-      BucketCol, org.apache.spark.sql.types.IntegerType, nullable = true))
-
-  /** Streaming-ingest layout: files land in EVENT-TIME order (one append per
+  /** The table's layout: files land in EVENT-TIME order (one append per
     * time slice), the way a live Iceberg/stream table actually grows. This
     * matters semantically: the file source's watermark advances with each
     * slice, so a consumer with watermark delay >= slice width never
-    * late-drops in-order data. Feeding a key-bucketed HISTORICAL table
-    * through the watermarking stream is a misuse (that's the batch path) —
-    * every file spans the whole time range and all but the first batch
-    * arrives below the watermark.
+    * late-drops in-order data. Files bucketed by key instead each span the
+    * whole time range, so through a watermarking stream all but the first
+    * batch would arrive below the watermark.
     */
   def writeTimeSliced(ds: Dataset[Turn], dir: String, sliceMinutes: Int = 30,
                       filesPerSlice: Int = 2): Int = {
@@ -95,11 +75,7 @@ object TranscriptTable {
             java.nio.file.attribute.FileTime.fromMillis(t0 + k * 1000L))
         }
     }
-    def rmTree(p: Path): Unit = {
-      if (Files.isDirectory(p)) listDir(p).foreach(rmTree)
-      Files.deleteIfExists(p)
-    }
-    rmTree(Paths.get(staged))
+    graft.fs.Dirs.rmTree(Paths.get(staged))
     sliceDirs.size
   }
 
@@ -120,9 +96,8 @@ object TranscriptTable {
     import spark.implicits._
     graft.fs.LocalFs.install(spark)
     graft.fs.LocalFs.installDriverListing(spark, dir)
-    val r = spark.readStream.schema(readSchema)
+    val r = spark.readStream.schema(Turn.schema)
     val r2 = maxFilesPerTrigger.fold(r)(n => r.option("maxFilesPerTrigger", n))
-    r2.parquet(dir)
-      .select("conv_id", "turn_idx", "role", "text", "tool", "ts").as[Turn]
+    r2.parquet(dir).as[Turn]
   }
 }

@@ -95,14 +95,7 @@ object MakeLegacyFixture {
     implicit val enc = implicitly[Encoder[Handlers.ConvSummary]]
 
     val root = Paths.get(LegacyFixture.Root).toAbsolutePath
-    def rmTree(p: java.nio.file.Path): Unit = {
-      if (Files.isDirectory(p)) {
-        val s = Files.list(p)
-        try s.iterator().forEachRemaining(rmTree) finally s.close()
-      }
-      Files.deleteIfExists(p)
-    }
-    rmTree(root)
+    graft.fs.Dirs.rmTree(root)
     Files.createDirectories(root)
 
     val staged = Files.createTempDirectory("graft_fixture_staged").toString
