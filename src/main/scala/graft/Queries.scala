@@ -709,7 +709,7 @@ object Queries {
     Q("q36d_neardup_vs_corpus_stream",
       (s, d) => {
         val emb = t(s, d, "embeddings")
-        val base = s"${System.getProperty("java.io.tmpdir")}/graft_q36d_${System.nanoTime()}"
+        val base = graft.fs.Dirs.scratchFor(s, "q36d")
         emb.filter(col("vec_id") < 50).repartition(4)
           .write.mode("overwrite").parquet(s"$base/in")
         val incoming = s.readStream.schema(emb.schema)
@@ -878,16 +878,14 @@ object Queries {
              |    AS price_ratio
              |FROM orders""".stripMargin)),
 
-    // Two-phase SALTED aggregation (north rule: hot-key skew handling).
-    // Result is identical to the direct groupBy — salting is a physical
-    // strategy — so the oracle is simply the unsalted SQL.
+    // Hot-key aggregation: a plain groupBy. Spark's map-side partial
+    // aggregate sends at most one row per key per map task to the one
+    // Exchange, so a hot user_id adds no skew to the final aggregate; a
+    // (key, salt) pre-aggregation would add an Exchange and two
+    // HashAggregates and buy nothing (PlanSpec pins the shape).
     Q("q39_salted_agg",
-      (s, d) => graft.shuffle.Salting.saltedAgg(
-          t(s, d, "events"), col("user_id"), col("event_id"), 16)(
-          partial = Seq(count(lit(1)).as("pn"), sum(col("value")).as("psum")),
-          merge = Seq(sum(col("pn")).as("n_events"),
-            round(sum(col("psum")), 2).as("sum_value")))
-        .withColumnRenamed("__key", "user_id"),
+      (s, d) => t(s, d, "events").groupBy(col("user_id"))
+        .agg(count(lit(1)).as("n_events"), round(sum(col("value")), 2).as("sum_value")),
       Some("""SELECT user_id, count(*) AS n_events, round(sum(value), 2) AS sum_value
              |FROM events GROUP BY user_id""".stripMargin)),
 
@@ -1129,7 +1127,7 @@ object Queries {
     Q("q57b_curation_verdict_stream",
       (s, d) => {
         val docs = t(s, d, "documents")
-        val base = s"${System.getProperty("java.io.tmpdir")}/graft_q57b_${System.nanoTime()}"
+        val base = graft.fs.Dirs.scratchFor(s, "q57b")
         docs.repartition(4).write.mode("overwrite").parquet(s"$base/in")
         val incoming = s.readStream.schema(docs.schema)
           .option("maxFilesPerTrigger", "2").parquet(s"$base/in")

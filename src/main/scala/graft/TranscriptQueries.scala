@@ -95,7 +95,7 @@ object TranscriptQueries {
   private def runTranscriptStream(spark: SparkSession, tag: String,
       pipeline: Dataset[Turn] => DataFrame,
       input: SparkSession => Dataset[Turn] = transcripts): DataFrame = {
-    val base = s"${System.getProperty("java.io.tmpdir")}/graft_${tag}_${System.nanoTime()}"
+    val base = graft.fs.Dirs.scratchFor(spark, tag)
     val in = s"$base/in"; val out = s"$base/out"; val ckpt = s"$base/ckpt"
     TranscriptTable.writeTimeSliced(input(spark), in, sliceMinutes = 60)
     appendSentinel(spark, in)
@@ -118,7 +118,7 @@ object TranscriptQueries {
   def changeDetectStreamResume(spark: SparkSession): DataFrame = {
     import java.nio.file.{Files, Paths}
     implicit val enc = labeledEnc(spark)
-    val base = s"${System.getProperty("java.io.tmpdir")}/graft_t59_${System.nanoTime()}"
+    val base = graft.fs.Dirs.scratchFor(spark, "t59")
     val staged = s"$base/staged"; val in = s"$base/in"
     val out = s"$base/out"; val ckpt = s"$base/ckpt"
     TranscriptTable.writeTimeSliced(transcripts(spark), staged, sliceMinutes = 60)
@@ -440,10 +440,13 @@ object TranscriptQueries {
               |  CASE WHEN temp < 97 THEN 'COLD' WHEN temp > 99 THEN 'HOT'
               |       ELSE 'NOMINAL' END AS status
               |FROM c""".stripMargin)),
-    // skew-safe per-conversation stats over a table with a hot conversation;
-    // salting is a physical strategy — the oracle is the unsalted aggregate
+    // per-conversation stats over a table with a hot conversation: the
+    // map-side partial aggregate bounds the hot key's shuffle (as q39)
     Q("t49_salted_conv_stats",
-      (s, _) => graft.shuffle.Salting.convStatsSalted(transcripts(s).toDF()),
+      (s, _) => transcripts(s).groupBy(col("conv_id")).agg(
+        count(lit(1)).as("n_turns"),
+        sum(when(col("role") === "tool", 1L).otherwise(0L)).as("n_tool"),
+        max(col("turn_idx")).as("max_idx")),
       Some(s"""SELECT conv_id, count(*) AS n_turns,
               |  count(*) FILTER (WHERE role = 'tool') AS n_tool,
               |  max(turn_idx) AS max_idx

@@ -2,8 +2,10 @@ package graft.fs
 
 import java.nio.file.{Files, Path, Paths}
 
-/** Local scratch directories: the one recursive delete and the one scratch
-  * helper of the engine's mains and file-layout code. */
+import org.apache.spark.sql.SparkSession
+
+/** Local scratch directories: the one recursive delete and the scratch
+  * helpers of the engine's mains, registry entries and file-layout code. */
 object Dirs {
 
   /** Deletes `p` and, when it is a directory, everything under it, depth
@@ -31,5 +33,18 @@ object Dirs {
     val base = if (Files.isDirectory(shm)) shm else Paths.get(System.getProperty("java.io.tmpdir"))
     val dir = Files.createTempDirectory(base, prefix)
     try body(dir.toString) finally rmTree(dir)
+  }
+
+  /** A fresh directory `graft_<tag>_…` for a query's own files (stream
+    * input, sink output, checkpoint). It lies under the first entry of the
+    * session's `spark.local.dir` conf key, else under `java.io.tmpdir`, so
+    * a main whose local dir sits inside [[withScratch]] (Verify) deletes it
+    * with the rest. The conf key is read, not Spark's resolved local dirs:
+    * a `SPARK_LOCAL_DIRS` environment variable would win there. */
+  def scratchFor(spark: SparkSession, tag: String): String = {
+    val base = Paths.get(spark.conf.getOption("spark.local.dir")
+      .map(_.split(",")(0).trim).getOrElse(System.getProperty("java.io.tmpdir")))
+    Files.createDirectories(base)
+    Files.createTempDirectory(base, s"graft_${tag}_").toString
   }
 }

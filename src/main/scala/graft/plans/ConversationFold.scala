@@ -17,21 +17,30 @@ import graft.state.TurnAutomaton
   * LogicalPlan node + Strategy + SparkPlan, injected via
   * `spark.experimental.extraStrategies`.
   *
-  * Why a custom operator instead of `groupByKey(...).flatMapGroups`: the
-  * object path MATERIALIZES each group (we sort a conversation's turns in
-  * an array) — a conversation with tens of millions of turns is an OOM.
-  * This exec instead declares `requiredChildDistribution` (clustered by
-  * conv_id) + `requiredChildOrdering` (conv_id, turn_idx), so Catalyst's
+  * This is the engine's one batch fold (`AutomatonRunner.runBatch` calls
+  * it). Why a custom operator instead of `groupByKey` and a per-group
+  * function: that path hands each group over as an iterator in arbitrary
+  * order, so the fold would have to MATERIALIZE and sort the conversation
+  * — a conversation with millions of turns is an OOM. This exec instead
+  * declares `requiredChildDistribution` (clustered by conv_id) +
+  * `requiredChildOrdering` (conv_id, turn_idx), so Catalyst's
   * EnsureRequirements plants exactly one shuffle + one external (spillable)
   * sort, and the fold then streams over rows one at a time — O(automaton
   * state) memory per key regardless of conversation size. This is the
   * batch twin of the streaming contiguity rule.
+  *
+  * `outEncoder` gives the exec its output serializer. It rides on the node
+  * because every planning pass, AQE's re-optimization included, plans the
+  * node again from the logical plan alone.
   */
 case class ConversationFoldPlan(
     a: TurnAutomaton[Any, Any],
+    outEncoder: ExpressionEncoder[Any],
     override val output: Seq[Attribute],
     child: LogicalPlan) extends UnaryNode {
   override def producedAttributes: AttributeSet = AttributeSet(output)
+  // the encoder is planning input, not plan shape: keep it out of explain()
+  override protected def stringArgs: Iterator[Any] = Iterator(a, output, child)
   // the fold deserializes whole Turn rows: every child column is consumed
   // (without this, ColumnPruning would project the child down to nothing)
   override lazy val references: AttributeSet = child.outputSet
@@ -106,28 +115,10 @@ case class ConversationFoldExec(
 
 object ConversationFoldStrategy extends SparkStrategy {
   override def apply(plan: LogicalPlan): Seq[SparkPlan] = plan match {
-    case ConversationFoldPlan(a, out, child) =>
-      // serializer is built at planning time from the output attributes'
-      // schema; the encoder travels inside the exec (task-serialized once)
-      val enc = FoldRegistry.encoderFor(out)
-      ConversationFoldExec(a, out,
-        enc.createSerializer().asInstanceOf[ExpressionEncoder.Serializer[Any]],
-        planLater(child)) :: Nil
+    case ConversationFoldPlan(a, enc, out, child) =>
+      // the serializer travels inside the exec (task-serialized once)
+      ConversationFoldExec(a, out, enc.createSerializer(), planLater(child)) :: Nil
     case _ => Nil
-  }
-}
-
-/** Planning-time handoff of the output encoder (the logical plan carries
-  * only attributes; Catalyst nodes must stay case classes of plan types). */
-object FoldRegistry {
-  private val byExprIds =
-    new java.util.concurrent.ConcurrentHashMap[Seq[Long], ExpressionEncoder[_]]()
-  def register(out: Seq[Attribute], enc: ExpressionEncoder[_]): Unit =
-    byExprIds.put(out.map(_.exprId.id), enc)
-  def encoderFor(out: Seq[Attribute]): ExpressionEncoder[_] = {
-    val e = byExprIds.get(out.map(_.exprId.id))
-    require(e != null, "ConversationFold output encoder not registered")
-    e
   }
 }
 
@@ -153,9 +144,9 @@ object ConversationFold {
         s"unsupported encoder ${other.getClass}")
     }
     val outAttrs = org.apache.spark.sql.graftbridge.Bridge.toAttributes(expr.schema)
-    FoldRegistry.register(outAttrs, expr.resolveAndBind(outAttrs))
     val plan = ConversationFoldPlan(
-      a.asInstanceOf[TurnAutomaton[Any, Any]], outAttrs,
+      a.asInstanceOf[TurnAutomaton[Any, Any]],
+      expr.asInstanceOf[ExpressionEncoder[Any]], outAttrs,
       org.apache.spark.sql.graftbridge.Bridge.logicalPlanOf(turns))
     org.apache.spark.sql.graftbridge.Bridge.ofRows(spark, plan).as[O]
   }

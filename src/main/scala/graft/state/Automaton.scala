@@ -1,13 +1,11 @@
 package graft.state
 
-import scala.reflect.ClassTag
-
 import org.apache.spark.sql.{Dataset, Encoder, Encoders, KeyValueGroupedDataset}
 import org.apache.spark.sql.functions.col
-import org.apache.spark.sql.catalyst.encoders.ExpressionEncoder
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 
 import graft.model.Turn
+import graft.plans.ConversationFold
 
 /** A per-conversation ordered-state automaton: the engine's native form of
   * the reference's stateful EventTransformer
@@ -81,25 +79,11 @@ object AutomatonRunner {
         .asInstanceOf[S]
   }
 
-  /** Batch execution: group, sort per key, fold. One conversation's turns
-    * are materialized per task (bounded: conversations are short relative
-    * to partitions; hot keys are the streaming path's problem — see
-    * `flatMapSortedGroups` note below). */
-  def runBatch[S, O: Encoder](turns: Dataset[Turn], a: TurnAutomaton[S, O]): Dataset[O] = {
-    import turns.sparkSession.implicits._
-    turns.groupByKey(_.conv_id).flatMapGroups { (_: String, it: Iterator[Turn]) =>
-      val sorted = it.toArray.sortInPlaceBy(_.turn_idx)
-      var s = a.initial
-      val out = Vector.newBuilder[O]
-      var i = 0
-      while (i < sorted.length) {
-        val (s2, os) = a.onTurn(s, sorted(i))
-        s = s2; out ++= os; i += 1
-      }
-      out ++= a.onComplete(s)
-      out.result().iterator
-    }
-  }
+  /** Batch execution: one shuffle by conv_id, one spillable sort by
+    * (conv_id, turn_idx), then a fold that streams over the sorted rows in
+    * O(automaton state) per conversation — see [[ConversationFold]]. */
+  def runBatch[S, O: Encoder](turns: Dataset[Turn], a: TurnAutomaton[S, O]): Dataset[O] =
+    ConversationFold.run(turns, a)
 
   /** Checkpointed streaming state carried per conv_id.
     *

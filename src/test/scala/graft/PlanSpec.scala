@@ -52,6 +52,21 @@ class PlanSpec extends SparkSpec {
     assert("HashAggregate".r.findAllIn(plan).size >= 2)
   }
 
+  test("hot-key aggregates: partial aggregate, then ONE Exchange (q39, t49)") {
+    // the map-side partial aggregate sends a hot key at most one row per map
+    // task, so no (key, salt) pre-aggregation (2 Exchanges, 4 HashAggregates)
+    // is needed to bound it
+    Seq("q39_salted_agg", "t49_salted_conv_stats").foreach { name =>
+      val plan = planOf(name)
+      val lines = plan.linesIterator.toSeq
+      assert(lines.count(_.contains("Exchange hashpartitioning")) == 1, s"$name:\n$plan")
+      assert(lines.count(_.contains("HashAggregate(")) == 2, s"$name:\n$plan")
+      assert(lines.indexWhere(_.contains("functions=[partial_")) >
+        lines.indexWhere(_.contains("Exchange hashpartitioning")),
+        s"$name: no partial aggregate below the Exchange:\n$plan")
+    }
+  }
+
   // '*(N)' prefixes in executedPlan.toString mark whole-stage-codegen stages
   test("whole-stage codegen covers the scan->filter->project hot path (q02)") {
     val plan = planOf("q02_filter_project")
