@@ -102,6 +102,7 @@ object FlowSink {
     // instead of deep inside the provider's schema check (StateVersion)
     graft.state.StateVersion.checkAndStamp(checkpointDir)
     graft.fs.LocalFs.install(out.sparkSession)
+    SharedCodegen.install(out.sparkSession)
     val sink = new ExactlyOnceParquetSink(outDir)
     val q = out.writeStream
       .outputMode("append")
@@ -119,6 +120,7 @@ object FlowSink {
   def fanOut[O](out: Dataset[O], checkpointDir: String,
       sinks: Map[String, ExactlyOnceParquetSink]): StreamingQuery = {
     graft.fs.LocalFs.install(out.sparkSession)
+    SharedCodegen.install(out.sparkSession)
     out.writeStream
       .outputMode("append")
       .option("checkpointLocation", checkpointDir)

@@ -113,7 +113,7 @@ object QualityOps {
     * cross-engine before the 1e-6 rounding. */
   def sourceStats(docs: DataFrame, shortChars: Int = 100,
       maxShortFrac: Double = 0.5, minDocs: Long = 3): DataFrame =
-    Spread(docs).groupBy(col("source"))
+    docs.groupBy(col("source"))
       .agg(
         count(lit(1)).as("n_docs"),
         round(avg(TextFunctions.tokenCount(col("text"))), 6).as("avg_tokens"),
@@ -158,7 +158,7 @@ object QualityOps {
   def packSequences(docs: DataFrame, window: Int = 2048): DataFrame = {
     val w = Window.partitionBy(col("lang")).orderBy(col("doc_id"))
       .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    Spread(docs)
+    docs
       .select(col("doc_id"), col("lang"),
         TextFunctions.tokenCount(col("text")).cast("long").as("n_tokens"))
       .withColumn("start_tok", sum(col("n_tokens")).over(w) - col("n_tokens"))

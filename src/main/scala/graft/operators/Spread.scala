@@ -34,7 +34,10 @@ import org.apache.spark.sql.catalyst.plans.logical.{Filter, LeafNode, Project, U
   * NOT applied to scan+partial-aggregate shapes (plain groupBy queries):
   * there the map-side combine collapses rows before any exchange, and a
   * round-robin shuffle of the raw rows costs more than the single-core
-  * map work saves (measured: q01/q03/q04 ~1.5-2x slower with it).
+  * map work saves (measured: q01/q03/q04 ~1.5-2x slower with it; q51's
+  * per-source stats 1.37x slower). Nor before a keyed window over light
+  * per-row work: the window's own exchange spreads the rows (q53's token
+  * count, 1.25x slower with it).
   */
 object Spread {
   def apply(df: DataFrame): DataFrame = {

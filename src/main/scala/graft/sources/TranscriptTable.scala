@@ -89,13 +89,15 @@ object TranscriptTable {
     * filesystem (`LocalFs.install`) and, when `dir` is local, driver-side
     * listing of every micro-batch's files (`LocalFs.installDriverListing`),
     * so a bulk batch of more than 32 files runs no listing job of one task
-    * per file. Offsets, the source log and the checkpoint layout do not
-    * depend on either. */
+    * per file, and, for a session without artifacts, generated code shared
+    * across its streaming queries (`SharedCodegen.install`). Offsets, the
+    * source log and the checkpoint layout depend on none of them. */
   def readStream(spark: SparkSession, dir: String,
                  maxFilesPerTrigger: Option[Int] = None): Dataset[Turn] = {
     import spark.implicits._
     graft.fs.LocalFs.install(spark)
     graft.fs.LocalFs.installDriverListing(spark, dir)
+    graft.flow.SharedCodegen.install(spark)
     val r = spark.readStream.schema(Turn.schema)
     val r2 = maxFilesPerTrigger.fold(r)(n => r.option("maxFilesPerTrigger", n))
     r2.parquet(dir).as[Turn]

@@ -123,6 +123,7 @@ object AutomatonRunner {
     import turns.sparkSession.implicits._
     implicit val stateEnc: Encoder[ConvStateRow] = Encoders.product[ConvStateRow]
     graft.fs.LocalFs.install(turns.sparkSession)
+    graft.flow.SharedCodegen.install(turns.sparkSession)
 
     val func = (key: String, newTurns: Iterator[Turn], gs: GroupState[ConvStateRow]) => {
       // end-of-stream sentinel rows only exist to push the watermark past
@@ -255,6 +256,7 @@ object AutomatonRunner {
       idleGapMs: Long = 30 * 60 * 1000L): Dataset[O] = {
     import org.apache.spark.sql.streaming.TimeMode
     graft.fs.LocalFs.install(turns.sparkSession)
+    graft.flow.SharedCodegen.install(turns.sparkSession)
     keyed(turns, watermarkDelay)
       .transformWithState(new ConvProcessor[S, O](a, idleGapMs),
         TimeMode.EventTime(), OutputMode.Append())

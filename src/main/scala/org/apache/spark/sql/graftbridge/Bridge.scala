@@ -28,6 +28,26 @@ object Bridge {
       .sessionState.streamingQueryManager.stateStoreCoordinator
     ()
   }
+  private def artifactManager(spark: SparkSession) =
+    spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession].artifactManager
+  /** The session's job-artifact state: non-null when its tasks run under an
+    * executor class loader of their own. `ArtifactManager` computes it
+    * once, on first use, from the session's
+    * `spark.sql.artifact.isolation.enabled`, so reading it fixes the
+    * session's isolation for the rest of its life. */
+  def artifactState(spark: SparkSession): AnyRef = artifactManager(spark).state
+  /** A jar, class, Python include, file or archive was added to the
+    * session. `sessionArtifactAdded` alone is set only for jars and
+    * classes; the others land in the manager's lists. All four members are
+    * `protected` in Scala and public methods on the JVM. */
+  def hasSessionArtifacts(spark: SparkSession): Boolean = {
+    val m = artifactManager(spark)
+    def member(name: String): AnyRef =
+      classOf[org.apache.spark.sql.artifact.ArtifactManager].getMethod(name).invoke(m)
+    member("sessionArtifactAdded").asInstanceOf[java.util.concurrent.atomic.AtomicBoolean].get ||
+      Seq("jarsList", "pythonIncludeList", "sparkContextRelativePaths")
+        .exists(n => !member(n).asInstanceOf[java.util.Collection[_]].isEmpty)
+  }
   def registerFunction(spark: SparkSession, name: String,
                        builder: Seq[Expression] => Expression): Unit =
     spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]

@@ -67,6 +67,17 @@ class PlanSpec extends SparkSpec {
     }
   }
 
+  test("light per-row work before an aggregate or a window is not Spread (q51, q53)") {
+    // the aggregate's partial pre-combine and the window's own exchange
+    // already spread the rows; a round-robin shuffle in front costs more
+    Seq("q51_source_filter", "q53_pack_sequences").foreach { name =>
+      val plan = planOf(name)
+      val lines = plan.linesIterator.toSeq
+      assert(lines.count(_.contains("Exchange")) == 1, s"$name:\n$plan")
+      assert(!plan.contains("RoundRobinPartitioning"), s"$name:\n$plan")
+    }
+  }
+
   // '*(N)' prefixes in executedPlan.toString mark whole-stage-codegen stages
   test("whole-stage codegen covers the scan->filter->project hot path (q02)") {
     val plan = planOf("q02_filter_project")

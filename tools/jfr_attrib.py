@@ -1,21 +1,25 @@
 #!/usr/bin/env python3
-"""Attribute process forks and task-thread parking in a running JVM.
+"""Attribute process forks, task-thread parking, generated-code compiles and
+deoptimizations in a running JVM.
 
 Attaches to a running JVM (by default the perfbench JVM, found by its main
 class `perfbench.Main` in /proc) with `jcmd <pid> JFR.start`, records
-`jdk.ProcessStart`, `jdk.ThreadPark` (parks of 1 ms or more) and
-`jdk.ExecutionSample` (every 10 ms) until the JVM exits (or for
-`--seconds`), then prints:
+`jdk.ProcessStart`, `jdk.ThreadPark` (parks of 1 ms or more),
+`jdk.Deoptimization` and `jdk.ExecutionSample` (every 10 ms) until the JVM
+exits (or for `--seconds`), then prints:
 
   * process starts: total, by command, by thread, and by stack;
   * park time of task threads ("Executor task launch worker ..."), by stack;
   * task-thread CPU samples by top non-JDK frame, and the share spent
     deserializing the task binary (`JavaSerializerInstance.deserialize` under
-    `ResultTask.runTask` or `ShuffleMapTask.runTask`);
+    `ResultTask.runTask` or `ShuffleMapTask.runTask`), and the share spent
+    compiling generated code (`CodeGenerator.doCompile` or janino frames);
+  * deoptimizations (all threads), by reason;
   * per perfbench leg (warm, live, cores, c1; "rest" is everything outside
     a drain, such as set-up and the output check): task-thread CPU samples
-    split into `ShuffleMapTask` and `ResultTask`, and task-thread park time
-    inside a task (an idle pool thread parks in JDK frames only).
+    split into `ShuffleMapTask` and `ResultTask` and the share compiling
+    generated code, task-thread park time inside a task (an idle pool thread
+    parks in JDK frames only), and deoptimizations.
     The legs are the drain windows in the run's `events.jsonl`, which the
     benchmark writes to its `--work` directory when it exits.
 
@@ -51,6 +55,11 @@ DESERIALIZE = "org.apache.spark.serializer.JavaSerializerInstance.deserialize"
 RUN_TASK = {"org.apache.spark.scheduler.ResultTask.runTask": "ResultTask",
             "org.apache.spark.scheduler.ShuffleMapTask.runTask": "ShuffleMapTask"}
 JDK = re.compile(r"^(java\.|jdk\.|sun\.|com\.sun\.)")
+# a sample with one of these frames is compiling generated code; janino
+# recurses deeply, so a stack cut at 64 frames can hold janino frames only
+COMPILE = re.compile(r"^(org\.codehaus\.(janino|commons\.compiler)\."
+                     r"|org\.apache\.spark\.sql\.catalyst\.expressions\.codegen\."
+                     r"CodeGenerator\$\.doCompile$)")
 
 # frames that say how a process was started or a thread parked, not why
 NOISE = re.compile(r"^(java\.|jdk\.|sun\.|scala\.concurrent\.|org\.apache\.hadoop\.util\.Shell"
@@ -66,6 +75,10 @@ JFC = """<?xml version="1.0" encoding="UTF-8"?>
     <setting name="enabled">true</setting>
     <setting name="stackTrace">true</setting>
     <setting name="threshold">%d ms</setting>
+  </event>
+  <event name="jdk.Deoptimization">
+    <setting name="enabled">true</setting>
+    <setting name="stackTrace">false</setting>
   </event>
   <event name="jdk.ExecutionSample">
     <setting name="enabled">true</setting>
@@ -129,7 +142,7 @@ def record(pid, out, seconds):
 
 def load_events(jfr_file):
     p = subprocess.run(["jfr", "print", "--json", "--stack-depth", "64",
-                        "--events", "jdk.ProcessStart,jdk.ThreadPark", jfr_file], check=True, capture_output=True, text=True)
+                        "--events", "jdk.ProcessStart,jdk.ThreadPark,jdk.Deoptimization", jfr_file], check=True, capture_output=True, text=True)
     return json.loads(p.stdout)["recording"]["events"]
 
 
@@ -187,6 +200,10 @@ def deserializing(names):
     return next((RUN_TASK[n] for n in below if n in RUN_TASK), None)
 
 
+def compiling(names):
+    return any(COMPILE.match(n) for n in names)
+
+
 def task_type(names, cut):
     """The task type whose runTask is on this stack; "truncated" when the
     stack was cut off before any runTask frame."""
@@ -230,8 +247,8 @@ def epoch_ms(stamp, ref_ms):
 
 def summarize_cpu(samples, legs=()):
     by_frame, deser = collections.Counter(), collections.Counter()
-    by_leg, cut_io_by_leg = collections.Counter(), collections.Counter()
-    total = truncated = cut_deser = 0
+    by_leg, cut_io_by_leg, compile_by_leg = (collections.Counter() for _ in range(3))
+    total = truncated = cut_deser = compiles = 0
     ref = legs[0][0] if legs else 0
     for e in samples:
         v = e.get("values", {})
@@ -248,13 +265,17 @@ def summarize_cpu(samples, legs=()):
         if kind:
             deser[kind] += 1
         cut_deser += cut_io
+        comp = compiling(names)
+        compiles += comp
         if legs:
             leg = leg_at(legs, epoch_ms(v.get("startTime"), ref) or 0)
             by_leg[leg, task_type(names, cut)] += 1
             cut_io_by_leg[leg] += cut_io
+            compile_by_leg[leg] += comp
     return {"task_samples": total, "truncated": truncated, "by_top_frame": by_frame,
             "deserialize": deser, "truncated_deserialize": cut_deser, "by_leg": by_leg,
-            "truncated_deserialize_by_leg": cut_io_by_leg}
+            "truncated_deserialize_by_leg": cut_io_by_leg, "compile": compiles,
+            "compile_by_leg": compile_by_leg}
 
 
 def report_cpu(c, top, out=sys.stdout):
@@ -270,6 +291,8 @@ def report_cpu(c, top, out=sys.stdout):
     # those were deserializing something
     p(f"  truncated, in java.io.ObjectInputStream, caller cut off: "
       f"{c['truncated_deserialize']} ({pct(c['truncated_deserialize']):.1f}%)")
+    p(f"  compiling generated code (CodeGenerator.doCompile, janino): "
+      f"{c['compile']} ({pct(c['compile']):.1f}%)")
     p("  by top non-JDK frame:")
     for k, m in c["by_top_frame"].most_common(top):
         p(f"    {m:8d} {pct(m):5.1f}%  {k}")
@@ -304,6 +327,7 @@ def stack_key(event, depth):
 def summarize(events, depth, legs=()):
     forks_cmd, forks_thread, forks_stack = (collections.Counter() for _ in range(3))
     park_s, park_n, park_leg_s = (collections.Counter() for _ in range(3))
+    deopt_reason, deopt_leg = collections.Counter(), collections.Counter()
     forks = 0
     ref = legs[0][0] if legs else 0
     for e in events:
@@ -324,9 +348,14 @@ def summarize(events, depth, legs=()):
             if legs and k != IDLE:
                 park_leg_s[leg_at(legs, epoch_ms(v.get("startTime"), ref) or 0)] += \
                     seconds_of(v.get("duration"))
+        elif e["type"] == "jdk.Deoptimization":
+            deopt_reason[v.get("reason") or "?"] += 1
+            if legs:
+                deopt_leg[leg_at(legs, epoch_ms(v.get("startTime"), ref) or 0)] += 1
     return {"forks": forks, "forks_by_command": forks_cmd, "forks_by_thread": forks_thread,
             "forks_by_stack": forks_stack, "task_park_s": park_s, "task_park_n": park_n,
-            "task_park_s_by_leg": park_leg_s}
+            "task_park_s_by_leg": park_leg_s, "deopts_by_reason": deopt_reason,
+            "deopts_by_leg": deopt_leg}
 
 
 def report(s, top, out=sys.stdout):
@@ -345,29 +374,35 @@ def report(s, top, out=sys.stdout):
     p(f"task-thread park: {total:.1f} s in {sum(s['task_park_n'].values())} parks")
     for k, sec in s["task_park_s"].most_common(top):
         p(f"    {sec:8.2f} s {s['task_park_n'][k]:7d}x  " + "\n                        <- ".join(k))
+    p(f"deoptimizations: {sum(s['deopts_by_reason'].values())}")
+    for k, n in s["deopts_by_reason"].most_common(top):
+        p(f"    {n:8d}  {k}")
 
 
 LEG_ORDER = ("warm", "live", "cores", "c1")
 
 
 def report_legs(c, s, out=sys.stdout):
-    """Task-thread CPU samples and park time per perfbench leg."""
+    """Task-thread CPU samples, park time and deoptimizations per perfbench
+    leg."""
     p = lambda *a: print(*a, file=out)
     by = c["by_leg"]
-    legs = {leg for leg, _ in by} | set(s["task_park_s_by_leg"])
+    legs = {leg for leg, _ in by} | set(s["task_park_s_by_leg"]) | set(s["deopts_by_leg"])
     rank = lambda leg: (LEG_ORDER.index(leg.split()[0]) if leg.split()[0] in LEG_ORDER
                         else len(LEG_ORDER), leg)
     n_all = c["task_samples"]
     p("per leg (task threads; drain windows from events.jsonl, rest = outside every drain):")
     p(f"  {'leg':14s} {'samples':>8s} {'of all':>7s} {'ShuffleMap':>11s} {'Result':>7s} "
-      f"{'cut':>6s} {'cut ObjIn':>10s} {'park s':>8s}  (park: in a task, not idle)")
+      f"{'cut':>6s} {'cut ObjIn':>10s} {'compile':>8s} {'park s':>8s} {'deopts':>7s}"
+      "  (park: in a task, not idle; deopts: all threads)")
     for leg in sorted(legs, key=rank):
         n = sum(m for (lg, _), m in by.items() if lg == leg)
         pct = lambda m: f"{100.0 * m / n:.1f}%" if n else "-"
         p(f"  {leg:14s} {n:8d} {100.0 * n / n_all if n_all else 0.0:6.1f}% "
           f"{pct(by[leg, 'ShuffleMapTask']):>11s} {pct(by[leg, 'ResultTask']):>7s} "
           f"{pct(by[leg, 'truncated']):>6s} {pct(c['truncated_deserialize_by_leg'][leg]):>10s} "
-          f"{s['task_park_s_by_leg'][leg]:8.1f}")
+          f"{pct(c['compile_by_leg'][leg]):>8s} {s['task_park_s_by_leg'][leg]:8.1f} "
+          f"{s['deopts_by_leg'][leg]:7d}")
 
 
 def main():

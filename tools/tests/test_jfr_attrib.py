@@ -261,10 +261,57 @@ class LegSplitTest(unittest.TestCase):
         rows = [r.split() for r in out.getvalue().splitlines()[2:]]
         self.assertEqual([r[0] for r in rows], ["warm", "cores", "c1", "rest"])
         # cores: 6 samples of 9; 3 map, 1 result, 2 cut (1 of them in
-        # ObjectInputStream), 0.5 s parked
+        # ObjectInputStream), none compiling, 0.5 s parked, no deopts
         self.assertEqual(rows[1], ["cores", "6", "66.7%", "50.0%", "16.7%", "33.3%", "16.7%",
-                                   "0.5"])
-        self.assertEqual(rows[3][-1], "0.2")
+                                   "0.0%", "0.5", "0"])
+        self.assertEqual(rows[3][-2], "0.2")
+
+    def test_compile_and_deopt_split_by_leg(self):
+        legs = [(T0, T0 + 1000, "warm"), (T0 + 2000, T0 + 4000, "cores")]
+        task = "Executor task launch worker for task %d.0"
+        janino = [frame("org/codehaus/janino/UnitCompiler", "compileUnit"),
+                  frame("org/codehaus/commons/compiler/util/AbstractCompiler", "cook"),
+                  frame("org/apache/spark/sql/catalyst/expressions/codegen/CodeGenerator$",
+                        "doCompile"),
+                  frame("org/apache/spark/sql/execution/WholeStageCodegenExec", "doExecute"),
+                  frame("org/apache/spark/scheduler/ShuffleMapTask", "runTask")]
+        # janino recursing past the 64-frame cut: janino frames only
+        cut = sample(task % 7, janino[:1] * 3)
+        cut["values"]["stackTrace"]["truncated"] = True
+        samples = ([at(sample(task % 1, janino), 100 + i) for i in range(3)] +
+                   [at(sample(task % 2, SCAN), 500)] +
+                   [at(cut, 2100), at(sample(task % 3, STATE), 2200)] +
+                   # a CodeGenerator frame that is not doCompile (a cache hit)
+                   [at(sample(task % 4, [frame(
+                       "org/apache/spark/sql/catalyst/expressions/codegen/CodeGenerator$",
+                       "compile")] + STATE), 2300)] +
+                   [at(sample("stream execution thread", janino), 2400)])
+        c = jfr_attrib.summarize_cpu(samples, legs)
+        self.assertEqual(c["task_samples"], 7)
+        self.assertEqual(c["compile"], 4)
+        self.assertEqual(dict(c["compile_by_leg"]), {"warm": 3, "cores": 1})
+
+        deopt = lambda ms, reason: at({"type": "jdk.Deoptimization", "values": {
+            "reason": reason, "eventThread": {"javaName": "driver"}}}, ms)
+        s = jfr_attrib.summarize([deopt(200, "unstable_if"), deopt(2500, "class_check"),
+                                  deopt(2600, "unstable_if"), deopt(9000, "null_check")],
+                                 depth=2, legs=legs)
+        self.assertEqual(dict(s["deopts_by_leg"]), {"warm": 1, "cores": 2, "rest": 1})
+        self.assertEqual(s["deopts_by_reason"]["unstable_if"], 2)
+
+        out = io.StringIO()
+        jfr_attrib.report_cpu(c, top=3, out=out)
+        self.assertIn("compiling generated code (CodeGenerator.doCompile, janino): 4 (57.1%)",
+                      out.getvalue())
+        out = io.StringIO()
+        jfr_attrib.report(s, top=3, out=out)
+        self.assertIn("deoptimizations: 4", out.getvalue())
+        out = io.StringIO()
+        jfr_attrib.report_legs(c, s, out=out)
+        rows = {r.split()[0]: r.split() for r in out.getvalue().splitlines()[2:]}
+        self.assertEqual((rows["warm"][7], rows["warm"][9]), ("75.0%", "1"))
+        self.assertEqual((rows["cores"][7], rows["cores"][9]), ("33.3%", "2"))
+        self.assertEqual(rows["rest"][9], "1")
 
 
 if __name__ == "__main__":
