@@ -29,6 +29,18 @@ object Queries {
   private def t(spark: SparkSession, dir: String, name: String): DataFrame =
     spark.read.parquet(s"$dir/$name.parquet")
 
+  /** `query` over `rows` replayed as a stream of 4 files, 2 per trigger,
+    * through the exactly-once sink; its committed rows without `epoch`. */
+  private def asStream(s: SparkSession, tag: String, rows: DataFrame)(
+      query: DataFrame => DataFrame): DataFrame = {
+    val base = graft.fs.Dirs.scratchFor(s, tag)
+    rows.repartition(4).write.mode("overwrite").parquet(s"$base/in")
+    val incoming = s.readStream.schema(rows.schema)
+      .option("maxFilesPerTrigger", "2").parquet(s"$base/in")
+    graft.flow.FlowSink.runAvailableNow(query(incoming), s"$base/out", s"$base/ckpt")
+      .readCommitted(s).drop("epoch")
+  }
+
   // ------------------------------------------------------------------
   // relational core (TPC-H-ish)
   // ------------------------------------------------------------------
@@ -709,15 +721,9 @@ object Queries {
     Q("q36d_neardup_vs_corpus_stream",
       (s, d) => {
         val emb = t(s, d, "embeddings")
-        val base = graft.fs.Dirs.scratchFor(s, "q36d")
-        emb.filter(col("vec_id") < 50).repartition(4)
-          .write.mode("overwrite").parquet(s"$base/in")
-        val incoming = s.readStream.schema(emb.schema)
-          .option("maxFilesPerTrigger", "2").parquet(s"$base/in")
-        val out = SimilarityOps.nearDupAgainstCorpus(
-          incoming, emb, 0.25, dim = 64, bands = 4, bitsPerBand = 8)
-        graft.flow.FlowSink.runAvailableNow(out, s"$base/out", s"$base/ckpt")
-          .readCommitted(s).drop("epoch")
+        asStream(s, "q36d", emb.filter(col("vec_id") < 50))(incoming =>
+          SimilarityOps.nearDupAgainstCorpus(
+            incoming, emb, 0.25, dim = 64, bands = 4, bitsPerBand = 8))
       },
       Some(nearDupVsCorpusSql)),
 
@@ -1127,16 +1133,10 @@ object Queries {
     Q("q57b_curation_verdict_stream",
       (s, d) => {
         val docs = t(s, d, "documents")
-        val base = graft.fs.Dirs.scratchFor(s, "q57b")
-        docs.repartition(4).write.mode("overwrite").parquet(s"$base/in")
-        val incoming = s.readStream.schema(docs.schema)
-          .option("maxFilesPerTrigger", "2").parquet(s"$base/in")
         val src = QualityOps.sourceStats(docs)
           .select(col("source"), col("verdict").as("src_verdict"))
-        val out = QualityOps.curationVerdictAgainst(
-          QualityOps.curationSignals(incoming), src)
-        graft.flow.FlowSink.runAvailableNow(out, s"$base/out", s"$base/ckpt")
-          .readCommitted(s).drop("epoch")
+        asStream(s, "q57b", docs)(incoming =>
+          QualityOps.curationVerdictAgainst(QualityOps.curationSignals(incoming), src))
       },
       Some(curationVerdictSql))
   )

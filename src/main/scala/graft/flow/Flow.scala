@@ -98,19 +98,8 @@ object FlowSink {
     * with an exactly-once parquet sink. Returns the sink for read-back. */
   def runAvailableNow[O](out: Dataset[O], outDir: String,
       checkpointDir: String): ExactlyOnceParquetSink = {
-    // refuse a cross-state-schema resume HERE, with the migration pointer,
-    // instead of deep inside the provider's schema check (StateVersion)
-    graft.state.StateVersion.checkAndStamp(checkpointDir)
-    graft.fs.LocalFs.install(out.sparkSession)
-    SharedCodegen.install(out.sparkSession)
     val sink = new ExactlyOnceParquetSink(outDir)
-    val q = out.writeStream
-      .outputMode("append")
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch((df: Dataset[O], epochId: Long) => sink.addBatch(df.toDF(), epochId))
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
+    start(out, checkpointDir)(sink.addBatch).awaitTermination()
     sink
   }
 
@@ -118,17 +107,25 @@ object FlowSink {
     * one pass over the micro-batch, multiple idempotent sinks. `persist`
     * keeps the shared scan single. */
   def fanOut[O](out: Dataset[O], checkpointDir: String,
-      sinks: Map[String, ExactlyOnceParquetSink]): StreamingQuery = {
+      sinks: Map[String, ExactlyOnceParquetSink]): StreamingQuery =
+    start(out, checkpointDir) { (df, epochId) =>
+      val d = df.persist()
+      try sinks.values.foreach(_.addBatch(d, epochId))
+      finally { d.unpersist(); () }
+    }
+
+  /** Starts `out` as an AvailableNow query on `checkpointDir` that hands
+    * each epoch to `body`, refusing a cross-state-schema resume HERE, not
+    * deep inside the provider's schema check (StateVersion). */
+  private def start[O](out: Dataset[O], checkpointDir: String)(
+      body: (DataFrame, Long) => Unit): StreamingQuery = {
+    graft.state.StateVersion.checkAndStamp(checkpointDir)
     graft.fs.LocalFs.install(out.sparkSession)
     SharedCodegen.install(out.sparkSession)
     out.writeStream
       .outputMode("append")
       .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (df: Dataset[O], epochId: Long) =>
-        val d = df.toDF().persist()
-        try sinks.values.foreach(_.addBatch(d, epochId))
-        finally { d.unpersist(); () }
-      }
+      .foreachBatch((df: Dataset[O], epochId: Long) => body(df.toDF(), epochId))
       .trigger(Trigger.AvailableNow())
       .start()
   }

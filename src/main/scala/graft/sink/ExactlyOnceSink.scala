@@ -1,13 +1,13 @@
 package graft.sink
 
-import java.nio.charset.StandardCharsets
-import java.nio.file.{Files, Path, Paths, StandardCopyOption}
+import java.io.{InputStream, OutputStream}
+import java.nio.charset.StandardCharsets.UTF_8
 
-import scala.jdk.CollectionConverters._
-
+import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.execution.streaming.checkpointing.{CheckpointFileManager, HDFSMetadataLog}
 
-import graft.fs.{Dirs, LocalFs}
+import graft.fs.LocalFs
 
 /** Exactly-once table sink without an Iceberg runtime (SURVEY.md §7.3).
   *
@@ -17,10 +17,14 @@ import graft.fs.{Dirs, LocalFs}
   * worker.py:158-175`, `edge_router.py:138-154`). Spark's micro-batch model
   * turns that per-event contract into a per-epoch one: `foreachBatch` may
   * re-invoke an epoch after a failure, so the sink must be IDEMPOTENT BY
-  * EPOCH ID. We write each epoch to its own directory and flip a commit
-  * marker via atomic rename; a re-delivered epoch whose marker exists is
-  * skipped, and an epoch that died mid-write is fully overwritten on retry.
-  * Readers see exactly the committed epochs.
+  * EPOCH ID. We write each epoch to its own directory, then commit it as
+  * `_commits/<N>` (bytes `epoch=N`); a re-delivered epoch already there
+  * is skipped, and an epoch that died mid-write is fully overwritten on
+  * retry. Readers see exactly the committed epochs. `_commits` and the
+  * compaction marks `_compacted/<U>` are Spark `HDFSMetadataLog`s built
+  * from the active session: their `CheckpointFileManager` adds an entry
+  * atomically on any Hadoop filesystem, on `file:` through
+  * [[graft.fs.LocalFs]] (no fork).
   *
   * An epoch is written by at most `defaultParallelism` tasks (one per
   * core), not one per state partition: `coalesce` narrows without a
@@ -30,30 +34,26 @@ import graft.fs.{Dirs, LocalFs}
   * not the rows, sets the epoch's cost. On `file:` the write job uses
   * [[graft.fs.LocalFileSystem]], which creates files and dirs without
   * forking a `chmod` per file.
-  *
-  * Only the epoch and generation data go through Spark's parquet writer,
-  * and so through any Hadoop filesystem. The rest uses `java.nio.file` and
-  * so runs on local POSIX paths only: the per-epoch commit marker
-  * (`addBatch`), the generation's `_compacted` high-water flip and
-  * compaction's deletes (`compact` steps 2 and 3), and the marker reads
-  * (`isCommitted`, `committedEpochs`, `compactedUpTo`). Porting these to
-  * Spark's `CheckpointFileManager`, whose `createAtomic` picks rename or
-  * direct put per filesystem, is ROADMAP item 5.
   */
 class ExactlyOnceParquetSink(val dir: String) extends Serializable {
 
   private def epochDir(epochId: Long) = s"$dir/epoch=$epochId"
   private def genDir(upTo: Long) = s"$dir/_gen=$upTo"
-  private def commitsDir: Path = Paths.get(dir, "_commits")
-  private def marker(epochId: Long): Path = commitsDir.resolve(epochId.toString)
-  private def compactedMarker: Path = commitsDir.resolve("_compacted")
+  private def compactedDir = new Path(dir, "_compacted")
+
+  // Built once per instance, never per epoch: a log's constructor copies
+  // the session's whole Hadoop conf and creates its directory, so
+  // `compactions` waits for its directory (reading a sink writes nothing).
+  @transient private lazy val commits = {
+    LocalFs.install(SparkSession.active) // both logs resolve file: through it
+    new MarkerLog(s"$dir/_commits")
+  }
+  @transient private lazy val compactions = new MarkerLog(compactedDir.toString)
 
   /** High-water mark of the last compaction: every epoch <= this lives in
     * the generation dir, its per-epoch dir and marker deleted. */
   def compactedUpTo(): Option[Long] =
-    if (!Files.exists(compactedMarker)) None
-    else Some(new String(Files.readAllBytes(compactedMarker),
-      StandardCharsets.UTF_8).trim.toLong)
+    if (commits.fm.exists(compactedDir)) compactions.getLatestBatchId() else None
 
   /** An epoch at or below the compaction mark is committed BY DEFINITION:
     * micro-batches commit sequentially (epoch N+1 never starts before N's
@@ -61,7 +61,7 @@ class ExactlyOnceParquetSink(val dir: String) extends Serializable {
     * which lets it delete their markers and keep the `_commits` listing
     * O(epochs since last compaction) instead of O(stream lifetime). */
   def isCommitted(epochId: Long): Boolean =
-    compactedUpTo().exists(epochId <= _) || Files.exists(marker(epochId))
+    compactedUpTo().exists(epochId <= _) || commits.get(epochId).isDefined
 
   /** The foreachBatch body. Safe to call repeatedly with the same epochId. */
   def addBatch(df: DataFrame, epochId: Long): Unit = {
@@ -72,13 +72,10 @@ class ExactlyOnceParquetSink(val dir: String) extends Serializable {
       df.foreach(_ => ())
       return
     }
-    // overwrite handles a torn previous attempt of this same epoch
+    // overwrite handles a torn previous attempt of this same epoch; only
+    // this call adds `epochId`, so the log's no-overwrite add never races
     write(df, epochDir(epochId))
-    Files.createDirectories(commitsDir)
-    val tmp = commitsDir.resolve(s".${epochId}.tmp")
-    Files.write(tmp, s"epoch=$epochId".getBytes(StandardCharsets.UTF_8))
-    Files.move(tmp, marker(epochId), StandardCopyOption.ATOMIC_MOVE,
-      StandardCopyOption.REPLACE_EXISTING)
+    commits.add(epochId, s"epoch=$epochId")
   }
 
   /** Every parquet write of the sink (epochs and generations): one task
@@ -89,76 +86,72 @@ class ExactlyOnceParquetSink(val dir: String) extends Serializable {
       .options(LocalFs.writerOptions(spark)).parquet(path)
   }
 
-  def committedEpochs(): Seq[Long] =
-    if (!Files.exists(commitsDir)) Seq.empty
-    else {
-      val s = Files.list(commitsDir)
-      try s.iterator().asScala
-        .map(_.getFileName.toString)
-        // "."-prefixed = in-flight tmp markers; "_"-prefixed = the
-        // compaction high-water marker (not a per-epoch commit)
-        .filterNot(n => n.startsWith(".") || n.startsWith("_"))
-        .map(_.toLong).toSeq.sorted
-      finally s.close()
-    }
+  def committedEpochs(): Seq[Long] = commits.batches
 
   /** Read back exactly the committed epochs (uncommitted dirs invisible):
     * the compacted generation, if any, plus every epoch committed since. */
   def readCommitted(spark: SparkSession): DataFrame = {
-    val upTo = compactedUpTo()
-    val epochs = committedEpochs().filter(e => upTo.forall(e > _))
-    require(upTo.isDefined || epochs.nonEmpty, s"no committed epochs under $dir")
-    val parts =
-      upTo.map(g => spark.read.parquet(genDir(g))).toSeq ++
-      (if (epochs.nonEmpty)
-        Seq(spark.read.option("basePath", dir).parquet(epochs.map(epochDir): _*))
-      else Nil)
-    parts.reduce(_.unionByName(_))
+    val (upTo, tail) = markAndTail()
+    require(upTo.isDefined || tail.nonEmpty, s"no committed epochs under $dir")
+    read(spark, upTo, tail)
   }
 
-  /** Compact the committed epochs into ONE generation dir (round-4 judge
-    * stretch): a long-running stream commits one directory + one marker
-    * per micro-batch, and at 100 TB the read-back's file listing over
-    * hundreds of thousands of epoch dirs becomes the bottleneck — the same
-    * reason Iceberg/Delta rewrite manifests. Protocol, crash-safe at every
-    * step:
+  private def markAndTail(): (Option[Long], Seq[Long]) = {
+    val upTo = compactedUpTo()
+    (upTo, committedEpochs().filter(e => upTo.forall(e > _)))
+  }
+
+  /** Generation `upTo`, if any, unioned with the epoch dirs of `tail`. */
+  private def read(spark: SparkSession, upTo: Option[Long], tail: Seq[Long]): DataFrame = {
+    val gen = upTo.map(g => spark.read.parquet(genDir(g)))
+    val epochs = if (tail.isEmpty) None
+      else Some(spark.read.option("basePath", dir).parquet(tail.map(epochDir): _*))
+    (gen ++ epochs).reduce(_.unionByName(_))
+  }
+
+  /** Compact the committed epochs into ONE generation dir: a long-running
+    * stream commits one directory + one marker per micro-batch, and the
+    * read-back's listing grows with them — the reason Iceberg/Delta
+    * rewrite manifests. Protocol, crash-safe at every step:
     *
     *  1. write all currently-committed rows (previous generation + epoch
     *     dirs) to a NEW `_gen=<upTo>` dir — invisible to readers until...
-    *  2. ...the `_commits/_compacted` high-water marker flips to <upTo>
-    *     via atomic rename (a crash before the flip leaves an orphan gen
-    *     dir; readers still see the old view, and re-running compact
-    *     overwrites it);
-    *  3. covered epoch dirs, their markers, and the previous generation
-    *     are deleted — `isCommitted` answers epochs <= upTo from the
-    *     marker alone, so redelivery dedup survives the marker deletion.
+    *  2. ...`<upTo>` is added to the compaction log (a crash before that
+    *     leaves an orphan gen dir; readers still see the old view, and
+    *     re-running compact overwrites it);
+    *  3. covered epoch dirs, their markers, superseded generations and
+    *     their marks are deleted, in that order — `isCommitted` answers
+    *     epochs <= upTo from the mark alone, and a crash leaves only what
+    *     a log entry still names, for the next `compact` to delete.
     *
     * Safe to run WHILE the stream is live (e.g. from a maintenance thread):
     * epochs committing after step 1's listing stay as epoch dirs until the
-    * next compaction. Steps 2 and 3 use `java.nio.file` (local POSIX
-    * only; see the class doc). */
+    * next compaction. */
   def compact(spark: SparkSession): Unit = {
-    val upTo0 = compactedUpTo()
-    val tail = committedEpochs().filter(e => upTo0.forall(e > _))
-    if (tail.isEmpty) return
-    val newUpTo = tail.max
-    // step 1: materialize the full committed view into the new generation
-    val view =
-      (upTo0.map(g => spark.read.parquet(genDir(g))).toSeq :+
-        spark.read.option("basePath", dir).parquet(tail.map(epochDir): _*))
-        .reduce(_.unionByName(_))
-    write(view, genDir(newUpTo))
-    // step 2: atomic high-water flip
-    Files.createDirectories(commitsDir)
-    val tmp = commitsDir.resolve(s"._compacted.tmp")
-    Files.write(tmp, newUpTo.toString.getBytes(StandardCharsets.UTF_8))
-    Files.move(tmp, compactedMarker, StandardCopyOption.ATOMIC_MOVE,
-      StandardCopyOption.REPLACE_EXISTING)
-    // step 3: best-effort cleanup of everything the generation covers
-    tail.foreach { e =>
-      Dirs.rmTree(Paths.get(epochDir(e)))
-      Files.deleteIfExists(marker(e))
+    val (upTo0, tail) = markAndTail()
+    if (tail.nonEmpty) {
+      val newUpTo = tail.max
+      write(read(spark, upTo0, tail), genDir(newUpTo)) // step 1
+      compactions.add(newUpTo, newUpTo.toString) // step 2: the flip
     }
-    upTo0.foreach(g => Dirs.rmTree(Paths.get(genDir(g))))
+    // step 3, best effort: whatever the latest generation covers
+    compactedUpTo().foreach { upTo =>
+      committedEpochs().filter(_ <= upTo).foreach(e => commits.fm.delete(new Path(epochDir(e))))
+      commits.purge(upTo + 1)
+      compactions.batches.filter(_ < upTo).foreach(g => commits.fm.delete(new Path(genDir(g))))
+      compactions.purge(upTo)
+    }
   }
+}
+
+/** An `HDFSMetadataLog` over the active session whose entries are plain
+  * UTF-8 text, not Spark's JSON, so `_commits/<N>` keeps the bytes
+  * `epoch=N` that the sink wrote before it used the log. */
+private class MarkerLog(path: String) extends HDFSMetadataLog[String](SparkSession.active, path) {
+  override protected def serialize(text: String, out: OutputStream): Unit =
+    out.write(text.getBytes(UTF_8))
+  override protected def deserialize(in: InputStream): String =
+    new String(in.readAllBytes(), UTF_8)
+  def batches: Seq[Long] = listBatches.toSeq
+  def fm: CheckpointFileManager = fileManager
 }

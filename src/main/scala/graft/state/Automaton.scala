@@ -85,7 +85,8 @@ object AutomatonRunner {
   def runBatch[S, O: Encoder](turns: Dataset[Turn], a: TurnAutomaton[S, O]): Dataset[O] =
     ConversationFold.run(turns, a)
 
-  /** Checkpointed streaming state carried per conv_id.
+  /** Streaming execution on flatMapGroupsWithState + EventTimeTimeout,
+    * with checkpointed streaming state carried per conv_id.
     *
     * `buffered` holds only turns behind a GAP: `turn_idx` is dense per
     * conversation, so a contiguous run starting at the next expected index
@@ -100,15 +101,12 @@ object AutomatonRunner {
     * state IO being ~zero and state IO being twice the stream volume.
     * `maxEmittedIdx` makes redelivery idempotent (the reference's
     * `last_event_seen` dedup, `worker.py:158-175`).
-    */
-  /** Streaming execution on flatMapGroupsWithState + EventTimeTimeout.
     *
     * @param idleGapMs a conversation with no new turns for this long past
-    *                  the watermark is completed and its state evicted —
-    *                  the quiesce semantics of the reference
-    *                  (`cluster.py:51-89`) per key instead of per job.
-    */
-  /** @param initialState keyed state rows to seed the NEW query's store
+    *   the watermark is completed and its state evicted — the quiesce
+    *   semantics of the reference (`cluster.py:51-89`) per key instead of
+    *   per job.
+    * @param initialState keyed state rows to seed the NEW query's store
     *   with at batch 0 — the checkpoint-migration path (StateMigration):
     *   fMGWS invokes the function for EVERY initial-state key in the first
     *   micro-batch (with an empty data iterator if the key has no input),

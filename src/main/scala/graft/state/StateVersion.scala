@@ -1,7 +1,12 @@
 package graft.state
 
-import java.nio.charset.StandardCharsets
-import java.nio.file.{Files, Paths}
+import java.nio.charset.StandardCharsets.UTF_8
+
+import org.apache.hadoop.fs.Path
+import org.apache.spark.sql.classic.SparkSession
+import org.apache.spark.sql.execution.streaming.checkpointing.CheckpointFileManager
+
+import graft.fs.LocalFs
 
 /** Engine state-schema version marker for streaming checkpoints.
   *
@@ -25,19 +30,25 @@ object StateVersion {
     * it. New/empty checkpoint: write the marker. Marker present: require
     * it matches. State present but NO marker: the checkpoint predates
     * versioning (engine <= round 3 wrote none) — refuse with the
-    * migration pointer rather than let the provider fail opaquely. */
+    * migration pointer rather than let the provider fail opaquely. Spark's
+    * `CheckpointFileManager` reads and writes it, on any Hadoop scheme,
+    * with the active session's Hadoop conf. */
   def checkAndStamp(ckptDir: String): Unit = {
-    val dir = Paths.get(ckptDir)
-    val marker = dir.resolve(MarkerFile)
-    if (Files.exists(marker)) {
-      val v = new String(Files.readAllBytes(marker), StandardCharsets.UTF_8).trim.toInt
+    val spark = SparkSession.active
+    LocalFs.install(spark)
+    val dir = new Path(ckptDir)
+    val fm = CheckpointFileManager.create(dir, spark.sessionState.newHadoopConf())
+    val marker = new Path(dir, MarkerFile)
+    if (fm.exists(marker)) {
+      val in = fm.open(marker)
+      val v = try new String(in.readAllBytes(), UTF_8).trim.toInt finally in.close()
       require(v == Current,
         s"checkpoint $ckptDir was written by graft state-schema v$v but this " +
         s"engine runs v$Current — resuming would fail the state-store schema " +
         s"check. Migrate with graft.state.StateMigration.resume(spark, " +
         s"oldCkpt, input, automaton, ...) onto a FRESH checkpoint; the old " +
         s"one is left untouched as the rollback point.")
-    } else if (Files.isDirectory(dir.resolve("state"))) {
+    } else if (fm.exists(new Path(dir, "state"))) {
       throw new IllegalStateException(
         s"checkpoint $ckptDir holds state but no $MarkerFile marker — it " +
         s"predates state-schema versioning (graft <= round 3, state-schema " +
@@ -46,9 +57,10 @@ object StateVersion {
         s"a fresh checkpoint, or stamp the marker manually if this " +
         s"checkpoint is known to be v$Current.")
     } else {
-      Files.createDirectories(dir)
-      Files.write(marker, Current.toString.getBytes(StandardCharsets.UTF_8))
+      fm.mkdirs(dir)
+      val out = fm.createAtomic(marker, overwriteIfPossible = true)
+      out.write(Current.toString.getBytes(UTF_8))
+      out.close()
     }
-    ()
   }
 }
